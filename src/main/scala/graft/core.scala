@@ -93,3 +93,19 @@ object Tables {
     }
   }
 }
+
+/** Scratch directories under `java.io.tmpdir`, each deleted recursively
+  * when the JVM exits. The hook runs through Hadoop's shutdown manager at
+  * a priority below Spark's own hook, so the SparkContext (and any stream
+  * still writing into a dir) has stopped before the dirs go. */
+object TempDirs {
+  private val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+  org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+    () => dirs.forEach(d => org.apache.hadoop.fs.FileUtil.fullyDelete(d)), 20)
+
+  def tmp(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    dirs.add(d)
+    d.toString
+  }
+}

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Op, Tables}
+import graft.TempDirs.tmp
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -17,8 +18,6 @@ import graft.pipeline.Versioned
 object EtlOps {
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
   private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   // A4+A5: read parquet -> write parquet -> read back. The re-read result is
   // what downstream consumers see, so that is what gets oracle-checked.

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Mats.MatOps
 import graft.{Op, Tables}
+import graft.TempDirs.tmp
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -27,8 +28,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object LlmOps {
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   /** Whitespace-normalized lowercase text — the dedup key. */
   private def normText(c: Column): Column =

@@ -207,7 +207,7 @@ object Multimodal {
   private val scanBinaryFiles = Op(
     "scan_binary_files",
     (s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_bin_")
+      val dir = java.nio.file.Paths.get(graft.TempDirs.tmp("graft_bin_"))
       t(s, d, "region").select(col("r_regionkey"), col("r_name"))
         .collect() // 5 rows: fixture construction, not a data-path collect
         .foreach { r =>

@@ -302,28 +302,52 @@ final class IngestionRunner(spark: SparkSession, cfg: IngestionConfig) {
     r.format(c.sourceFormat).load(c.sourcePath)
   }
 
-  private def execute(c: IngestionConfig): Either[String, Long] = {
-    ensureDatabase(c)
-    c.ingestMode match {
-      case IngestMode.Batch =>
-        // constraints gate the INCOMING batch — for a merge that is the
-        // source relation (surviving target rows were gated at their own
-        // write time), exactly Delta's per-written-row CHECK scope
-        val gated = gateConstraints(c, readBatch(c))
-        try {
-          val n = c.writeMode match {
-            case m: WriteMode.Merge => mergeInto(c, gated.clean, m)
-            case m => writeBatch(c, gated.clean, m)
-          }
-          // quarantined rows publish only AFTER the main commit (see
-          // [[ViolationAction.Quarantine]]): a failed/conflicted write
-          // reaches the finally below with nothing published
-          gated.publish()
-          Right(n)
-        } finally gated.release()
-      case IngestMode.Stream(cp) => Right(writeStream(c, cp))
+  /** `clusterBy` columns the batch cannot supply. A merge also keeps the
+    * target's columns (schema evolution backfills what the source lacks),
+    * so those count too. Checked before anything is written: the optimize
+    * pass runs after the commit and swallows its own failures. */
+  private def unknownClusterCols(c: IngestionConfig, batch: DataFrame): Seq[String] = {
+    val resolver = spark.sessionState.conf.resolver
+    def missing(ks: Seq[String], cols: Array[String]) =
+      ks.filterNot(k => cols.exists(resolver(_, k)))
+    val notInBatch = missing(c.clusterBy, batch.columns)
+    c.writeMode match {
+      case _: WriteMode.Merge if notInBatch.nonEmpty &&
+          spark.catalog.tableExists(c.fullTableName) =>
+        missing(notInBatch, spark.table(c.fullTableName).columns)
+      case _ => notInBatch
     }
   }
+
+  private def execute(c: IngestionConfig): Either[String, Long] =
+    c.ingestMode match {
+      case IngestMode.Batch =>
+        val batch = readBatch(c)
+        val unknown = unknownClusterCols(c, batch)
+        if (unknown.nonEmpty)
+          Left(s"clusterBy column(s) not in ${c.displayName}: ${unknown.mkString(", ")}")
+        else {
+          ensureDatabase(c)
+          // constraints gate the INCOMING batch — for a merge that is the
+          // source relation (surviving target rows were gated at their own
+          // write time), exactly Delta's per-written-row CHECK scope
+          val gated = gateConstraints(c, batch)
+          try {
+            val n = c.writeMode match {
+              case m: WriteMode.Merge => mergeInto(c, gated.clean, m)
+              case m => writeBatch(c, gated.clean, m)
+            }
+            // quarantined rows publish only AFTER the main commit (see
+            // [[ViolationAction.Quarantine]]): a failed/conflicted write
+            // reaches the finally below with nothing published
+            gated.publish()
+            Right(n)
+          } finally gated.release()
+        }
+      case IngestMode.Stream(cp) =>
+        ensureDatabase(c)
+        Right(writeStream(c, cp))
+    }
 
   /** True for rows violating ANY constraint. Per-rule `IS FALSE` keeps the
     * three-valued CHECK semantics (UNKNOWN satisfies) and makes the OR
@@ -427,97 +451,43 @@ final class IngestionRunner(spark: SparkSession, cfg: IngestionConfig) {
   private def fsFor(p: Path): FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** Rows written by the write(s) executed inside `body`, summed from the
-    * tasks' output metrics (`recordsWritten` — what the UI's "output"
-    * column shows). The previous implementation ended every ingest with
-    * `spark.table(target).count()` — a full rescan of the just-written (and
-    * ever-growing) target per append, which at 100 TB doubles the read cost
-    * of each ingest just to return a Long.
-    *
-    * Task metrics, not the SQL `numOutputRows` metric: under AQE a V1 file
-    * write's executed plan roots at AdaptiveSparkPlanExec, a leaf node whose
-    * stages (and their metrics) are invisible to plan traversal — task-level
-    * output metrics count the same rows for every plan shape. The count is
-    * scoped to THIS call's jobs via a unique job group (a shared session may
-    * be running other writes concurrently; an unfiltered listener would sum
-    * theirs too). Delivery is async, but the listener bus is FIFO: a job's
-    * TaskEnd events always precede its JobEnd, so once every started group
-    * job has its end event the task counts are complete — the wait exits on
-    * that signal (plus a short stability window against a start/end pair
-    * still queued together), not on a long fixed counter-quiesce that both
-    * stalled every write ~500 ms and could undercount under bus lag.
-    * Retried tasks could in principle double-count; file-committer output
-    * metrics are only reported for committed attempts. */
-  private def withWrittenRowCount(body: => Unit): Long = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-    val sc = spark.sparkContext
-    val group = s"graft-ingest-${java.util.UUID.randomUUID()}"
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val rows = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            group == j.properties.getProperty("spark.jobGroup.id")) {
-          jobs.add(j.jobId)
-          j.stageInfos.foreach(si => stages.add(si.stageId))
-        }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        if (jobs.contains(j.jobId)) ended.add(j.jobId)
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId)) {
-          val m = e.taskMetrics
-          if (m != null) rows.addAndGet(m.outputMetrics.recordsWritten)
-        }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "graft ingest write", interruptOnCancel = false)
-    try {
-      body
-      var stableSince = System.nanoTime()
-      var lastSeen = (-1, -1)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      // `jobs.isEmpty` guards the zero-jobs exit: every write body launches
-      // at least one job, so an empty set means the listener bus has not
-      // delivered the JobStart yet — exiting on the stability window alone
-      // would report rows=0 on a lagging bus. The 30 s deadline remains the
-      // escape hatch if a body ever legitimately runs no job.
-      while (System.nanoTime() < deadline && {
-        val seen = (jobs.size, ended.size)
-        if (seen != lastSeen) { lastSeen = seen; stableSince = System.nanoTime() }
-        jobs.isEmpty || jobs.size != ended.size ||
-          System.nanoTime() - stableSince < 100L * 1000 * 1000
-      }) Thread.sleep(10)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    rows.get
+  /** Runs `write` over `df` and returns the rows it wrote, counted by an
+    * [[org.apache.spark.sql.Observation]] riding the written relation: one
+    * `count` aggregate in the write's own plan, so no rescan of the
+    * (ever-growing) target and no extra job. An Observation belongs to
+    * this one DataFrame, so concurrent writes on a shared session never
+    * add to each other's counts; its metrics come from the result stage,
+    * where accumulator updates apply once per task; and `get` wakes on the
+    * query's end event. Task output metrics would need a listener scoped
+    * by job group and a wait for late bus events instead. The same
+    * mechanism counts the stream path's clean micro-batch writes. */
+  private def countWritten(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = new org.apache.spark.sql.Observation()
+    write(df.observe(obs, count(lit(1)).as("n")))
+    obs.get("n").asInstanceOf[Long]
   }
 
   /** A5 (framework.py:154-175): append/overwrite, partitioned, managed
     * (saveAsTable) or external (save + register). */
   private def writeBatch(c: IngestionConfig, df: DataFrame, m: WriteMode): Long = {
     val mode = if (m == WriteMode.Overwrite) "overwrite" else "append"
-    var w = df.write.format("parquet").mode(mode)
-    if (c.partitionBy.nonEmpty) w = w.partitionBy(c.partitionBy: _*)
-    // Fail-gated DIRECT writes need a job-atomic committer: algorithm v2
-    // (and direct-write cloud committers) publish part-files per task, so
-    // tasks finishing before the raise_error would leave partial batch
-    // data visible in an append target. The option lands in this write's
-    // hadoop conf only; the versioned merge/optimize paths don't need it
-    // (fresh-dir stage + pointer-swap publish).
-    if (c.constraints.nonEmpty && c.onViolation == ViolationAction.Fail)
-      w = w.option("mapreduce.fileoutputcommitter.algorithm.version", "1")
-    val n = withWrittenRowCount {
+    val n = countWritten(df) { observed =>
+      var w = observed.write.format("parquet").mode(mode)
+      if (c.partitionBy.nonEmpty) w = w.partitionBy(c.partitionBy: _*)
+      // Fail-gated DIRECT writes need a job-atomic committer: algorithm v2
+      // (and direct-write cloud committers) publish part-files per task, so
+      // tasks finishing before the raise_error would leave partial batch
+      // data visible in an append target. The option lands in this write's
+      // hadoop conf only; the versioned merge/optimize paths don't need it
+      // (fresh-dir stage + pointer-swap publish).
+      if (c.constraints.nonEmpty && c.onViolation == ViolationAction.Fail)
+        w = w.option("mapreduce.fileoutputcommitter.algorithm.version", "1")
       c.targetPath match {
-        case Some(p) =>
-          w.save(p)
-          registerExternal(c, p, Some(df.schema))
+        case Some(p) => w.save(p)
         case None => w.saveAsTable(c.fullTableName)
       }
     }
+    c.targetPath.foreach(p => registerExternal(c, p, Some(df.schema)))
     applyMetadata(c)
     optimizePostWrite(c)
     n
@@ -693,7 +663,7 @@ final class IngestionRunner(spark: SparkSession, cfg: IngestionConfig) {
     var staged: Path = null
     // only the stage write is counted — the legacy path's saveAsTable
     // re-write of the staged rows is the commit, not more written rows
-    val n = withWrittenRowCount { staged = stageVersion(c, merged) }
+    val n = countWritten(merged)(m => staged = stageVersion(c, m))
     if (partitioned) legacyRewriteFromStage(c, staged)
     else if (target.columns.toSeq != merged.columns.toSeq) {
       // evolved: SET LOCATION would keep the old column set — drop and
@@ -731,8 +701,7 @@ final class IngestionRunner(spark: SparkSession, cfg: IngestionConfig) {
         // are at-least-once on crash recovery: the quarantine dir is a
         // debugging/replay aid and may hold duplicates of a batch whose
         // commit raced a crash — same contract as a managed badRecordsPath.
-        // The committed count comes from an Observation riding the clean
-        // write (consistent with the batch path's written-rows return),
+        // The committed count is the clean write's (see [[countWritten]]),
         // not numInputRows, which counts quarantined rows too.
         val cleanRows = new java.util.concurrent.atomic.AtomicLong(0L)
         val q = source.writeStream
@@ -741,11 +710,8 @@ final class IngestionRunner(spark: SparkSession, cfg: IngestionConfig) {
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val gated = gateConstraints(c, batch)
             try {
-              val obs = new org.apache.spark.sql.Observation()
-              gated.clean
-                .observe(obs, count(lit(1)).as("n"))
-                .write.mode("append").parquet(target)
-              cleanRows.addAndGet(obs.get("n").asInstanceOf[Long])
+              cleanRows.addAndGet(countWritten(gated.clean)(
+                _.write.mode("append").parquet(target)))
               // publish after the clean append, inside the micro-batch —
               // the batch's checkpoint commit still follows, hence the
               // documented at-least-once quarantine delivery

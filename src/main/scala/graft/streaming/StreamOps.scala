@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.Mats.MatOps
 import graft.{Op, Tables}
+import graft.TempDirs.tmp
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,9 +31,6 @@ import java.nio.file.Files
   * (StreamingSpec), where a second landing batch exists.
   */
 object StreamOps {
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   /** One landing dir per (session, data dir) — the ops watching a single
     * arrival share it instead of re-writing the events table five times. */
   private val landed =
@@ -1128,7 +1126,7 @@ object StreamOps {
   //     session could still receive events: a straddling session's last
   //     first-half event L satisfies L > mid - gap, so its timer L+gap+1
   //     exceeds the first batch's closing watermark mid - gap.
-  // Three far-future sentinel rows (user -1, ignored by the processor)
+  // Two far-future sentinel rows (user -1, ignored by the processor)
   // advance the watermark past every live timer so ALL sessions flush
   // before the AvailableNow drain ends.
   private val streamTwsTimers = Op(

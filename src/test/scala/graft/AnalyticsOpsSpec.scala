@@ -134,7 +134,7 @@ class AnalyticsOpsSpec extends AnyFunSuite {
   // and a 1-5 pair seen only ONCE — the support filter must drop it.
   test("graph_triangles counts the planted triangle and applies the support filter") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("g_tri_").toString
+    val dir = TempDirs.tmp("g_tri_")
     Seq(
       (10L, 1L), (10L, 2L), (10L, 3L), // order 10: {1,2,3}
       (11L, 1L), (11L, 2L), (11L, 3L), // order 11: {1,2,3} → all pairs support 2
@@ -154,7 +154,7 @@ class AnalyticsOpsSpec extends AnyFunSuite {
   // count reaches n/2 = 5.5 is bin 5.
   test("agg_histogram_quantile picks the first bin crossing the median") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("g_hq_").toString
+    val dir = TempDirs.tmp("g_hq_")
     ((0 to 9).map(v => (v.toLong, "P1", v.toDouble)) :+ ((10L, "P1", 128.0)))
       .toDF("o_orderkey", "o_orderpriority", "o_totalprice")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/orders.parquet")
@@ -524,7 +524,7 @@ class AnalyticsOpsSpec extends AnyFunSuite {
   // oracle side), never a row computed with the wrong constant divisors.
   test("agg_gage_rr publishes nothing when the design cannot balance") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("g_grr_").toString
+    val dir = TempDirs.tmp("g_grr_")
     // 30 rows: every (op, pt) cell has at most 2 measurements (< 10)
     (1 to 30).map(i => (i.toLong, i, i.toLong % 7, i % 4, 100.0 + i))
       .toDF("l_orderkey", "l_linenumber", "l_suppkey", "l_partkey",

@@ -40,7 +40,7 @@ class EtlOpsSpec extends AnyFunSuite {
 
   test("layout_cluster produces near-disjoint per-file key ranges") {
     import java.nio.file.Files
-    val out = Files.createTempDirectory("g_lc_test_").toString
+    val out = TempDirs.tmp("g_lc_test_")
     Tables.load(spark, sfDir, "lineitem")
       .repartitionByRange(8, col("l_shipdate"), col("l_orderkey"))
       .sortWithinPartitions("l_shipdate", "l_orderkey")
@@ -128,8 +128,7 @@ class EtlOpsSpec extends AnyFunSuite {
     // not-restorable IllegalArgumentException instead of restaging garbage
     import org.apache.hadoop.fs.{Path => HPath}
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = new HPath(java.nio.file.Files
-      .createTempDirectory("graft_rstv_").toString)
+    val root = new HPath(TempDirs.tmp("graft_rstv_"))
     val v0 = Tables.load(spark, sfDir, "orders")
       .filter(col("o_orderkey") % 2 === 0)
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
@@ -221,7 +220,7 @@ class EtlOpsSpec extends AnyFunSuite {
   // matches the open current row.
   test("join_temporal_dim boundary semantics on a planted timeline") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("g_tdim_").toString
+    val dir = TempDirs.tmp("g_tdim_")
     // Tables.load reads events.ts as NANOSECOND longs (the driver fixture's
     // parquet shape) and truncates to µs — plant the same shape
     def ts(ms: Long): Long = ms * 1000000L
@@ -253,7 +252,7 @@ class EtlOpsSpec extends AnyFunSuite {
   // purchase stays matched.
   test("join_asof_tolerance expires matches older than the tolerance") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("g_tol_").toString
+    val dir = TempDirs.tmp("g_tol_")
     def ts(ms: Long): Long = ms * 1000000L
     Seq(
       (301L, 1L, "purchase", 5.0, ts(0L)),
@@ -295,7 +294,7 @@ class EtlOpsSpec extends AnyFunSuite {
     rows.values.foreach { case (n, orph) => assert(orph >= 0 && orph <= n) }
     // planted fixture: one lineitem row pointing at a nonexistent order
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("g_fk_").toString
+    val dir = TempDirs.tmp("g_fk_")
     Seq(10L, -999L).toDF("l_orderkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     Seq(10L).toDF("o_orderkey").withColumn("o_custkey", lit(1L))
@@ -334,7 +333,7 @@ class EtlOpsSpec extends AnyFunSuite {
     // planted: values 10 at day 0 and 40 at day 3 → days 1,2 interpolate
     // to 20, 30
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("g_ri_").toString
+    val dir = TempDirs.tmp("g_ri_")
     // ts planted as NANOSECOND longs — the driver fixture's parquet shape
     // that Tables.load expects (see join_temporal_dim's fixture)
     def ts(ms: Long): Long = ms * 1000000L

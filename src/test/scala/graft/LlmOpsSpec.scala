@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Seeded-hash LLM ops have no DuckDB oracle (SURVEY.md §7.5.4) — verified
   * here with planted near-duplicates and consistency against exact baselines. */
@@ -16,7 +15,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val base = (1 to 60).map(i => s"tok$i").mkString(" ")
     val near = (1 to 60).map(i => if (i == 30) "CHANGED" else s"tok$i").mkString(" ")
     val other = (1 to 60).map(i => s"other$i").mkString(" ")
-    val dir = Files.createTempDirectory("g_planted_").toString
+    val dir = TempDirs.tmp("g_planted_")
     Seq((1L, "en", base), (2L, "en", near), (3L, "en", other))
       .toDF("doc_id", "lang", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -92,7 +91,7 @@ class LlmOpsSpec extends AnyFunSuite {
       (1 to 60).map(j => s"c$j").mkString(" ")))
     val base = (1 to 60).map(i => s"m$i").mkString(" ")
     val near = (1 to 60).map(i => if (i == 30) "CHANGED" else s"m$i").mkString(" ")
-    val dir = Files.createTempDirectory("g_mh_crowd_").toString
+    val dir = TempDirs.tmp("g_mh_crowd_")
     (crowd ++ Seq((9001L, "en", base), (9002L, "en", near)))
       .toDF("doc_id", "lang", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -110,7 +109,7 @@ class LlmOpsSpec extends AnyFunSuite {
   // their proportional rate.
   test("sample_weighted keeps every max-length doc and ~1/4 of quarter-length") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("g_sw_").toString
+    val dir = TempDirs.tmp("g_sw_")
     val longs = (1L to 200L).map(i => (i, "en", "x", 4000))
     val shorts = (1001L to 1400L).map(i => (i, "en", "x", 1000))
     (longs ++ shorts).toDF("doc_id", "lang", "text", "n_chars")
@@ -194,7 +193,7 @@ class LlmOpsSpec extends AnyFunSuite {
   // min id with size 70; the unique doc stays out of the edge set.
   test("dedup_clusters clusters identical crowds past the df cap") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("g_cl_crowd_").toString
+    val dir = TempDirs.tmp("g_cl_crowd_")
     val crowd = (1 to 70).map(i =>
       (i.toLong, "en", (1 to 40).map(j => s"w$j").mkString(" ")))
     (crowd :+ ((999L, "en", "totally different text here")))
@@ -217,7 +216,7 @@ class LlmOpsSpec extends AnyFunSuite {
   // band, or Jaccard fails) must stay out.
   test("dedup_clusters clusters PERTURBED crowds past the df cap (minhash-star)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("g_cl_pcrowd_").toString
+    val dir = TempDirs.tmp("g_cl_pcrowd_")
     val base = (1 to 40).map(j => s"w$j").mkString(" ")
     val crowd = (1 to 70).map(i => (i.toLong, "en", s"$base uq$i"))
     // shares the (hot) "w1 w2 w3" shingle but nothing else similar
@@ -282,7 +281,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("dedup_exact keeps one survivor per duplicated text") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("g_exact_").toString
+    val dir = TempDirs.tmp("g_exact_")
     Seq((1L, "en", "same  text"), (2L, "en", "Same Text"), (3L, "en", "unique"))
       .toDF("doc_id", "lang", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -529,7 +528,7 @@ class LlmOpsSpec extends AnyFunSuite {
   // pair (a,b) 7 times (weighted by word frequency), (b,a) 3 times.
   test("text_bpe_train counts word-frequency-weighted adjacent pairs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("g_bpe_").toString
+    val dir = TempDirs.tmp("g_bpe_")
     Seq((0L, "abab abab ab"), (1L, "abab x"))
       .toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -116,7 +116,7 @@ class MultimodalSpec extends AnyFunSuite {
   test("mm_video_scene bounds scenes by frames; a one-frame doc is one scene") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("g_scene_").toString
+    val dir = TempDirs.tmp("g_scene_")
     Seq((1L, "short"),                    // < 64 bytes → 1 frame → 1 scene
         (2L, "x" * 300))                  // 5 frames → 1..5 scenes
       .toDF("doc_id", "text")

@@ -2,15 +2,21 @@ package graft
 
 import graft.pipeline._
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import org.scalatest.time.{Seconds, Span}
 
 /** Config-driven pipeline runner (reference A1-A14 semantics, SURVEY.md §2A):
   * validation, dry-run, factory dispatch, batch/merge/stream execution. */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TimeLimits {
   import TestSpark._
+  import TempDirs.tmp
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
+  // interrupts a run() stuck waiting for a write count that never arrives,
+  // so the test fails instead of hanging the suite
+  private implicit val signaler: Signaler = ThreadSignaler
+  private val countTimeout = Span(120, Seconds)
+
   private val srcDir: String = {
     // the default in-memory catalog forgets tables between JVMs while their
     // managed locations survive — clear stale test-db dirs so saveAsTable
@@ -485,6 +491,111 @@ class PipelineSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(l)
     assert(!scannedTarget.get, "append must not read the target table")
     assert(spark.table(s"$db.region_a").count() === 10L)
+  }
+
+  test("run() leaves the caller's job group in place") {
+    val sc = spark.sparkContext
+    val cfg = IngestionConfig("graft_it", "region_jg", srcDir,
+      writeMode = WriteMode.Overwrite)
+    sc.setJobGroup("caller-group", "harness work", interruptOnCancel = false)
+    try {
+      assert(new IngestionRunner(spark, cfg).run() === Right(5L))
+      assert(sc.getLocalProperty("spark.jobGroup.id") === "caller-group")
+    } finally sc.clearJobGroup()
+  }
+
+  test("concurrent appends on one session each count only their own rows") {
+    val db = "graft_it"
+    val nationDir = tmp("g_pipe_nation_")
+    Tables.load(spark, sfDir, "nation").write.mode("overwrite").parquet(nationDir)
+    val nations = spark.read.parquet(nationDir).count()
+    assert(nations !== 5L, "the two batches must differ in size")
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    val jobs = Seq("region_cc" -> srcDir, "nation_cc" -> nationDir).map {
+      case (t, dir) =>
+        spark.sql(s"DROP TABLE IF EXISTS $db.$t")
+        IngestionConfig(db, t, dir)
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try failAfter(countTimeout) {
+      for (_ <- 1 to 3) {
+        val start = new java.util.concurrent.CyclicBarrier(2)
+        val counts = jobs.map { cfg =>
+          pool.submit(new java.util.concurrent.Callable[Either[String, Long]] {
+            def call() = { start.await(); new IngestionRunner(spark, cfg).run() }
+          })
+        }.map(_.get())
+        assert(counts === Seq(Right(5L), Right(nations)))
+      }
+    } finally pool.shutdownNow()
+    assert(spark.table(s"$db.region_cc").count() === 15L)
+    assert(spark.table(s"$db.nation_cc").count() === 3 * nations)
+  }
+
+  test("an empty landing batch appends and counts zero rows") {
+    import spark.implicits._
+    val db = "graft_it"
+    // one empty part file, and a dir with no data file at all (explicit
+    // schema): the second writes from a relation with no input partition
+    val emptyFile = tmp("g_empty_file_")
+    Seq.empty[(Int, String)].toDF("k", "s").write.mode("overwrite").parquet(emptyFile)
+    val emptyDir = tmp("g_empty_dir_")
+    val schema = Seq.empty[(Int, String)].toDF("k", "s").schema
+    for ((t, cfg) <- Seq(
+        "empty_f" -> IngestionConfig(db, "empty_f", emptyFile),
+        "empty_d" -> IngestionConfig(db, "empty_d", emptyDir, schema = Some(schema)))) {
+      spark.sql(s"DROP TABLE IF EXISTS $db.$t")
+      failAfter(countTimeout) {
+        assert(new IngestionRunner(spark, cfg).run() === Right(0L))
+        assert(new IngestionRunner(spark, cfg).run() === Right(0L))
+      }
+      assert(spark.table(s"$db.$t").count() === 0L)
+    }
+  }
+
+  test("an all-tombstone merge returns the staged row count") {
+    import spark.implicits._
+    val db = "graft_it"; val tbl = s"$db.merge_tomb"
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    val src1 = tmp("g_mt1_")
+    Seq((1, "a", 1), (2, "b", 1), (3, "c", 1))
+      .toDF("k", "s", "v").write.mode("overwrite").parquet(src1)
+    val boot = IngestionConfig(db, "merge_tomb", src1,
+      writeMode = WriteMode.Merge(Seq("k"), deleteOnMatch = Some("v < 0")))
+    // only tombstones: each source row deletes its match and inserts
+    // nothing, so the stage holds exactly the surviving target rows
+    val src2 = tmp("g_mt2_"); val src3 = tmp("g_mt3_")
+    Seq((1, "a", -1), (2, "b", -1), (9, "z", -1))
+      .toDF("k", "s", "v").write.mode("overwrite").parquet(src2)
+    Seq((3, "c", -1)).toDF("k", "s", "v").write.mode("overwrite").parquet(src3)
+    failAfter(countTimeout) {
+      assert(new IngestionRunner(spark, boot).run() === Right(3L))
+      assert(new IngestionRunner(spark, boot.copy(sourcePath = src2)).run() === Right(1L))
+      assert(spark.table(tbl).collect().map(_.getInt(0)).toSeq === Seq(3))
+      assert(new IngestionRunner(spark, boot.copy(sourcePath = src3)).run() === Right(0L))
+    }
+    assert(spark.table(tbl).count() === 0L)
+  }
+
+  test("a clusterBy column the batch lacks fails before anything is written") {
+    val db = "graft_it"
+    spark.sql(s"DROP TABLE IF EXISTS $db.region_badc")
+    val cfg = IngestionConfig(db, "region_badc", srcDir,
+      writeMode = WriteMode.Overwrite, clusterBy = Seq("r_regionkey", "no_such_col"))
+    val res = new IngestionRunner(spark, cfg).run()
+    assert(res.isLeft && res.swap.exists(_.contains("no_such_col")), res)
+    assert(!spark.catalog.tableExists(s"$db.region_badc"))
+    // column names resolve as the session does: case-insensitively here
+    assert(new IngestionRunner(spark,
+      cfg.copy(clusterBy = Seq("R_REGIONKEY"))).run() === Right(5L))
+    // a merge keeps target columns its source lacks, so they may cluster
+    val narrow = tmp("g_badc_src_")
+    spark.table(s"$db.region_badc").select("r_regionkey")
+      .write.mode("overwrite").parquet(narrow)
+    assert(new IngestionRunner(spark, cfg.copy(sourcePath = narrow,
+      writeMode = WriteMode.Merge(Seq("r_regionkey")),
+      clusterBy = Seq("r_name"))).run() === Right(5L))
   }
 
   test("a crash between stage and commit leaves the old version readable (A7 atomicity)") {

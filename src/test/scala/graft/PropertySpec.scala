@@ -124,7 +124,7 @@ class PropertySpec extends AnyFunSuite {
     def doc(share: Int, salt: String) =
       ((1 to share).map(i => s"tok$i") ++
         (share + 1 to 60).map(i => s"$salt$i")).mkString(" ")
-    val dir = Files.createTempDirectory("g_prop_mh_").toString
+    val dir = TempDirs.tmp("g_prop_mh_")
     Seq((1L, "en", doc(60, "x")), (2L, "en", doc(54, "y")),
         (3L, "en", doc(30, "z")), (4L, "en", doc(0, "w")))
       .toDF("doc_id", "lang", "text")

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   *                            so state_rows is structurally absent.
   *
   * Checkpoint discovery: the ops create their checkpoints via
-  * Files.createTempDirectory with a per-key prefix, so the probe diffs
+  * TempDirs.tmp with a per-key prefix, so the probe diffs
   * the tmp dir around each run — no production code changes for a dev
   * readout. Wall seconds include the fixture landing writes (the ops
   * stage their own landing files), so they are drain-harness costs, not

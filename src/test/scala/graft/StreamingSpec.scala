@@ -5,15 +5,14 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Streaming semantics the DuckDB oracle can't see (SURVEY.md §5.2.4):
   * batch parity, checkpoint resume without reprocessing, late-data drop. */
 class StreamingSpec extends AnyFunSuite {
   import TestSpark._
+  import TempDirs.tmp
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
 
   private val schema = StructType(Seq(
     StructField("event_id", LongType), StructField("user_id", LongType),
@@ -342,8 +341,6 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream_upsert_sink replays idempotently across a mid-stream crash") {
-    import java.nio.file.Files
-    def tmp(p: String) = Files.createTempDirectory(p).toString
     val ev = Tables.load(spark, sfDir, "events")
     val in = tmp("g_susr_in_"); val tgt = tmp("g_susr_tgt_")
     val ck = tmp("g_susr_ck_")

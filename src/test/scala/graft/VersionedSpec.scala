@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,7 +15,7 @@ class VersionedSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def freshRoot(): Path =
-    new Path(Files.createTempDirectory("graft_vspec_").toString)
+    new Path(TempDirs.tmp("graft_vspec_"))
 
   private def mkVersion(root: Path, name: String): Path = {
     val dir = Versioned.stagePath(root, Some(name))
