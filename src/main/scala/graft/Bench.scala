@@ -1,297 +1,94 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.collection.immutable.ListMap
 
 /** Benchmark main: times every registry key on SPARK_GRAFT_SF_DIR and prints
-  * ONE JSON line. Each query is materialized with a noop-format write — a
-  * `count()` would let Catalyst prune projection expressions that cannot
-  * change the row count, leaving fn_math / project_expr bodies unmeasured.
-  * The JSON is also written to a file (bench_result.json, or
-  * SPARK_GRAFT_BENCH_OUT) so the gate can't lose it to stray stdout.
+  * `per_query_ms` chunk lines, then ONE summary JSON line last. Each query
+  * is materialized with a noop-format write — a `count()` would let
+  * Catalyst prune projection expressions that cannot change the row count,
+  * leaving fn_math / project_expr bodies unmeasured. The full record is
+  * also written to a file (bench_result.json, or SPARK_GRAFT_BENCH_OUT) so
+  * the gate can't lose it to stray stdout. Exits 1 when a key fails.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def loadAvg(): Double =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    // Quiet-run admission (VERDICT r17 #7): a start loadavg ≥ 2 means
-    // another multi-core job owns part of the box and every timing below
-    // would be contention noise. Rather than immediately publishing a
-    // contended record, wait-and-retry up to N times for the burst to
-    // drain (1-minute loadavg needs ~a minute to reflect a stopped job).
-    // The retry evidence (each sampled load) goes into the record; if the
-    // box never quiets, the honest `contended: true` label remains the
-    // fallback — the driver's bench step always gets its JSON line.
-    val quietRetries = sys.env.getOrElse("SPARK_GRAFT_QUIET_RETRIES", "5").toInt
-    val quietSleepMs = sys.env.getOrElse("SPARK_GRAFT_QUIET_SLEEP_MS", "60000").toLong
-    val waitSamples = scala.collection.mutable.ArrayBuffer[Double]()
-    var l = loadAvg()
-    while (l >= 2.0 && waitSamples.size < quietRetries) {
-      waitSamples += l
-      System.err.println(
-        s"BENCH WAIT: loadavg=$l >= 2.0, sleeping ${quietSleepMs}ms " +
-          s"(${waitSamples.size}/$quietRetries) for the box to quiet")
-      Thread.sleep(quietSleepMs)
-      l = loadAvg()
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // pre-session sample: after the warm-ups the 1-minute average reads the
+    // bench's OWN load, and the label must reflect other work on the box
+    val loadStart = loadAvg()
+    val keys = Harness.keys()
     // ERROR, not WARN: dozens of per-key WARN lines (WindowExec single-
     // partition notes on domain-bounded readouts, state-store chatter)
     // used to flood the gate's bounded stdout tail and push the per-query
-    // chunk lines out of it; failures still surface via our own BENCH
-    // FAIL prints and the failed[] field
-    spark.sparkContext.setLogLevel("ERROR")
-    // JIT/codegen warm-up so the first timed query doesn't absorb session
-    // startup (~3s of compiler work on a cold JVM)
-    SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    // optional comma-separated key filter for iterating on hotspots
-    val only = sys.env.get("SPARK_GRAFT_BENCH_KEYS")
-      .map(_.split(",").map(_.trim).toSet)
-    // sorted, not Map order: per-key timings stay comparable across rounds
-    // and the codegen-warm-up absorber is always the same (first) key
-    val selected = (only match {
-      case Some(ks) => SparkEntry.queries.view.filterKeys(ks).toMap
-      case None     => SparkEntry.queries
-    }).toSeq.sortBy(_._1)
-    // RocksDB/state-store warm-up (same rationale as the codegen warm-up):
-    // the first stateful key otherwise absorbs the one-time RocksDB JNI
-    // load + state-store codegen, which is JVM startup cost, not key cost
-    if (selected.exists { case (k, _) =>
-        k.startsWith("stream_tws") || k.startsWith("scan_state_store") })
-      graft.streaming.StreamOps.warmRocksDb(spark)
-    // 1-minute load average at start and end: a loaded box inflates
-    // per-key wall-clock 2-4× (looks exactly like a code regression), so
-    // the record carries the evidence to discount contended runs.
-    // loadStart is the PRE-SESSION sample (`l`, the quiet-gate's own
-    // admission reading): sampling after the 32-thread JIT/RocksDB
-    // warm-ups reads the bench's OWN load (measured 7.6 on an idle box,
-    // r18) and mislabels every run contended — the label must reflect
-    // OTHER work on the box, which is what the pre-session sample sees.
-    val loadStart = l
-    var failed = List.empty[String]
-    val results = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-          failed ::= name
-          false
-        }
-      // a crashed key records -1, never its time-to-exception — the gate
-      // must be able to tell a broken key from a fast one
-      val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      // free this key's tracked materializations OUTSIDE its timed region
-      // (r19, VERDICT r18 #2: blocks pinned by earlier keys were squeezing
-      // storage/execution memory for every later key in the shared JVM)
-      Mats.release()
-      name -> dt
+    // chunk lines out of it; failures still surface on stderr and in the
+    // failed[] field
+    val outcomes = Harness.withSession(keys, logLevel = "ERROR") { spark =>
+      val q = SparkEntry.queries
+      Harness.run(keys)(k => q(k)(spark, sfDir).write.format("noop").mode("overwrite").save())
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val failedJson = failed.reverse.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.collect { case (_, v) if v >= 0 => v }.sum
-    val loadEnd = loadAvg()
-    // Contention self-labeling (the r14 lesson: a load-5.5 driver run
-    // recorded 1534.8 s for a tree that benches 400.5 s quiet — a 3.8×
-    // inflation indistinguishable from a code regression unless the
-    // record says so). A start load past 2.0 on this box means another
-    // multi-core job owned part of the CPU while we timed: the run is
-    // flagged `contended: true` so no reader can mistake it for a perf
-    // record. The flag is advisory, not a refusal — the driver's bench
-    // step must still produce a JSON line either way.
-    // (start-only: end load includes the bench's own executor threads,
-    // which is work, not contention)
-    val contended = loadStart >= 2.0
-    if (contended) System.err.println(
-      s"BENCH CONTENDED: loadavg start=$loadStart end=$loadEnd — timings " +
+    // a crashed key records -1, never its time-to-exception — the gate
+    // must be able to tell a broken key from a fast one
+    val results = outcomes.map(o => o.key -> (if (o.result.isRight) o.secs else -1.0))
+    val failed = outcomes.filter(_.result.isLeft).map(_.key)
+    val load = (loadStart, loadAvg())
+    if (contended(load)) System.err.println(
+      s"BENCH CONTENDED: loadavg start=${load._1} end=${load._2} — timings " +
         "are inflated by host contention; do not use as a perf record")
-    // Drift auto-attribution (r15 verdict #3, burst-aware since r17 —
-    // VERDICT r16 #2): readers used to hand-diff this run against the
-    // checked-in quiet records with bench_diff.py; now the record carries
-    // the diff AND self-adjudicates it. Baseline = per-key MIN across
-    // every NON-CONTENDED same-SF tools/bench_perkey_*.json, except that
-    // keys whose DEFINITION changed in round R only baseline against
-    // records tagged rR+ (ADVICE r16: a legitimate code-shape change must
-    // not be reported as drift against its own obsolete floor). Movers
-    // (≥1.5× or ≤0.67×, baseline ≥ 0.3 s — below that the micro-batch/JIT
-    // floor wobbles both ways) are then SOLO RE-MEASURED once, after the
-    // timed loop: a transient host burst (the r16 dq_* segment) won't
-    // reproduce, a real regression will. Classification:
-    //   uniform    — median ratio ≥ 1.3: host-shaped, whole-run
-    //   structural — ≥1 mover reproduces its slowdown on re-measure
-    //   host-burst — movers don't reproduce AND they cluster contiguously
-    //                in the alphabetical execution order (or the run
-    //                self-labeled contended): a transient load phase hit
-    //                consecutive keys, not code
-    //   transient  — movers don't reproduce, no burst shape
-    val drift: String = try {
-      // key → first round whose floors are valid for it (the round the
-      // key's semantics last changed); earlier records are excluded
-      val redefinedSince = Map(
-        "window_macd" -> 16, "dedup_threshold_sweep" -> 16,
-        "sql_tpch_q2" -> 16, "sql_tpch_q9" -> 16, "sql_tpch_q11" -> 16,
-        "sql_tpch_q16" -> 16, "sql_tpch_q20" -> 16,
-        // r18: StarBucketCap lowered the star pass's firing threshold
-        // (more verified star edges for the text cluster keys) and the
-        // embedding cluster key gained the hot-bucket code-rep path
-        "dedup_clusters" -> 18, "dedup_survivor" -> 18,
-        "dedup_embedding_clusters" -> 18, "emb_knn_graph" -> 18)
-      val dir = java.nio.file.Paths.get("tools")
-      val recs =
-        if (!java.nio.file.Files.isDirectory(dir)) Seq.empty
-        else {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.list(dir).iterator().asScala
-            .filter(_.getFileName.toString.matches("bench_perkey_.*\\.json"))
-            .flatMap { p =>
-              val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-              // same-SF records only: an sf0.001 iteration run must not
-              // ratio itself against the sf0.1 quiet floor
-              if (txt.contains("\"contended\":true") ||
-                !txt.contains("\"sf\":\"" + sfDir + "\"")) None
-              else {
-                val name = p.getFileName.toString
-                val round = "bench_perkey_r(\\d+)".r
-                  .findFirstMatchIn(name).map(_.group(1).toInt).getOrElse(0)
-                val qm = "\"queries\":\\{([^}]*)\\}".r
-                  .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-                val pairs = "\"([^\"]+)\":(-?[0-9.eE+]+)".r
-                  .findAllMatchIn(qm)
-                  .map(m => m.group(1) -> m.group(2).toDouble)
-                  .filter { case (k, v) =>
-                    v >= 0 && round >= redefinedSince.getOrElse(k, 0) }
-                  .toMap
-                if (pairs.isEmpty) None
-                else Some(name -> pairs)
-              }
-            }.toSeq
-        }
-      if (recs.isEmpty) "null"
-      else {
-        val base = recs.flatMap(_._2).groupMapReduce(_._1)(_._2)(math.min)
-        val cur = results.toMap
-        val ratios = base.toSeq.collect {
-          case (k, b) if b >= 0.3 && cur.getOrElse(k, -1.0) >= 0 =>
-            k -> cur(k) / b
-        }
-        if (ratios.isEmpty) "null"
-        else {
-          val sortedR = ratios.map(_._2).sorted
-          val median = sortedR(sortedR.size / 2)
-          val movers = ratios.filter { case (_, r) => r >= 1.5 || r <= 0.67 }
-            .sortBy { case (_, r) => -math.max(r, 1.0 / r) }.take(8)
-          // solo re-measure of SLOW movers only (speedups need no
-          // adjudication): one extra noop-write per mover, ≤ 8 keys.
-          // Each recheck samples loadavg around itself (ADVICE r17 #5): a
-          // re-measure taken while a host burst is STILL ongoing would
-          // reproduce the slowdown and wrongly upgrade the run to
-          // structural, so a recheck whose surrounding load ≥ 2 cannot
-          // confirm structure. A recheck that THROWS is its own label
-          // (recheck-error), never counted as reproduced.
-          val recheck: Map[String, (Double, Double)] = movers.collect {
-            case (k, r) if r >= 1.5 =>
-              val l0 = loadAvg()
-              val t0 = System.nanoTime()
-              val ok = try {
-                SparkEntry.queries(k)(spark, sfDir)
-                  .write.format("noop").mode("overwrite").save(); true
-              } catch { case _: Throwable => false }
-              val ratio2 =
-                if (ok) (System.nanoTime() - t0) / 1e9 / base(k) else -1.0
-              Mats.release()
-              k -> (ratio2, math.max(l0, loadAvg()))
-          }.toMap
-          val recheckErrored = recheck.exists { case (_, (r2, _)) => r2 < 0 }
-          val reproducedQuiet = recheck.filter {
-            case (_, (r2, ld)) => r2 >= 1.3 && ld < 2.0 }
-          val reproducedLoaded = recheck.filter {
-            case (_, (r2, ld)) => r2 >= 1.3 && ld >= 2.0 }
-          // burst shape: ≥3 slow movers packed into a contiguous-ish span
-          // of the alphabetical execution order (span ≤ 2× their count)
-          val order = selected.map(_._1).zipWithIndex.toMap
-          val slowIdx = movers.collect {
-            case (k, r) if r >= 1.5 && order.contains(k) => order(k) }
-          val clustered = slowIdx.size >= 3 &&
-            (slowIdx.max - slowIdx.min + 1) <= 2 * slowIdx.size
-          val kind =
-            if (median >= 1.3) "uniform"
-            else if (movers.isEmpty) "none"
-            else if (reproducedQuiet.nonEmpty) "structural"
-            else if (reproducedLoaded.nonEmpty || clustered || contended)
-              "host-burst"
-            else if (recheckErrored) "recheck-error"
-            else "transient"
-          val mj = movers.map { case (k, r) =>
-            val r2 = recheck.get(k)
-              .map { case (v, ld) =>
-                s""","recheck":${math.round(v * 100) / 100.0}""" +
-                  s""","recheck_load":${math.round(ld * 100) / 100.0}""" }
-              .getOrElse("")
-            "\"" + k + "\":{\"ratio\":" + (math.round(r * 100) / 100.0) + r2 + "}"
-          }.mkString("{", ",", "}")
-          s"""{"baseline_records":${recs.size},"compared":${ratios.size},""" +
-            s""""median_ratio":${math.round(median * 1000) / 1000.0},""" +
-            s""""kind":"$kind","clustered_movers":$clustered,"movers":$mj}"""
-        }
-      }
-    } catch { case _: Throwable => "null" }
-    val quietWaitJson = waitSamples.map(v => math.round(v * 100) / 100.0)
-      .mkString("[", ",", "]")
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","load":{"start":$loadStart,"end":$loadEnd},"quiet_wait":$quietWaitJson,"contended":$contended,"drift":$drift}"""
-    // The gate keeps only a bounded (~3 KB) tail of stdout, so the full
-    // 538-key map cannot ride the summary line (a truncated JSON line
-    // parses as null and would zero the whole bench). Instead (VERDICT r18
-    // #3): per-query times go out as SELF-CONTAINED chunked lines (ms
-    // ints, ≤ ~3 KB each) BEFORE the summary, so however much of the tail
-    // survives carries valid per-key JSON, and the summary line — the
-    // driver's parse target — stays last and small. The complete record
-    // always lands in bench_result.json / the tagged tools copy.
-    val chunkPairs = results.map { case (k, v) =>
-      s"\"" + k + "\":" + (if (v >= 0) math.round(v * 1000) else -1L) }
-    val chunks = {
-      val buf = scala.collection.mutable.ArrayBuffer[List[String]]()
-      var cur = List.empty[String]; var len = 0
-      chunkPairs.foreach { p =>
-        if (len + p.length > 2800 && cur.nonEmpty) {
-          buf += cur.reverse; cur = Nil; len = 0 }
-        cur = p :: cur; len += p.length + 1
-      }
-      if (cur.nonEmpty) buf += cur.reverse
-      buf.toSeq
-    }
-    chunks.zipWithIndex.foreach { case (c, i) =>
-      println(s"""{"metric":"per_query_ms","part":${i + 1},""" +
-        s""""parts":${chunks.size},"sf":"$sfDir","queries":${
-          c.mkString("{", ",", "}")}}""")
-    }
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$failedJson,"sf":"$sfDir","load":{"start":$loadStart,"end":$loadEnd},"quiet_wait":$quietWaitJson,"contended":$contended,"drift":$drift}""")
+    lines(results, failed, sfDir, load).foreach(println)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (line + "\n").getBytes("UTF-8"))
-    // round-stamped per-key copy (SPARK_GRAFT_BENCH_TAG=r13 → tools/
-    // bench_perkey_r13.json): bench_result.json is overwritten every run
-    // and the gate's BENCH_r{N}.json drops the per-key map, so this is the
-    // artifact that makes round-over-round per-key regression diffs
-    // machine-checkable (tools/bench_diff.py) instead of prose
-    sys.env.get("SPARK_GRAFT_BENCH_TAG").foreach { tag =>
-      val dir = java.nio.file.Paths.get("tools")
-      val p = (if (java.nio.file.Files.isDirectory(dir)) dir
-               else java.nio.file.Paths.get("."))
-        .resolve(s"bench_perkey_$tag.json")
-      java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))
-    }
-    spark.stop()
+      (record(results, failed, sfDir, load) + "\n").getBytes("UTF-8"))
     if (failed.nonEmpty) sys.exit(1)
   }
+
+  /** Upper bound on one chunk line's `queries` payload, in bytes. */
+  val ChunkBytes = 2800
+
+  /** The stdout lines the gate parses. The gate keeps only a bounded (~3 KB)
+    * tail of stdout, so the full per-key map cannot ride the summary line
+    * (a truncated JSON line parses as null and would zero the whole
+    * bench). Per-query times go out first as self-contained chunk lines
+    * (ms ints, ≤ [[ChunkBytes]] of payload each), so however much of the
+    * tail survives carries valid per-key JSON, and the summary line — the
+    * gate's parse target — stays last and small. */
+  def lines(results: Seq[(String, Double)], failed: Seq[String], sf: String,
+      load: (Double, Double)): Seq[String] = {
+    val ms = results.map { case (k, v) => k -> (if (v >= 0) math.round(v * 1000) else -1L) }
+    // greedy: a pair `"k":ms` opens a new chunk when it would push the
+    // current chunk's comma-joined payload past ChunkBytes
+    def bytes(p: (String, Long)) = p._1.length + 3 + p._2.toString.length
+    val chunks = ms.foldLeft(Vector.empty[(Vector[(String, Long)], Int)]) {
+      case (acc :+ ((c, len)), p) if len + bytes(p) <= ChunkBytes =>
+        acc :+ ((c :+ p, len + bytes(p) + 1))
+      case (acc, p) => acc :+ ((Vector(p), bytes(p) + 1))
+    }.map(_._1)
+    val parts = chunks.zipWithIndex.map { case (c, i) =>
+      Harness.json(ListMap("metric" -> "per_query_ms", "part" -> (i + 1), "parts" -> chunks.size,
+        "sf" -> sf, "queries" -> ListMap(c: _*)))
+    }
+    parts :+ summary(results, failed, sf, load, "n" -> results.size)
+  }
+
+  /** The complete record for SPARK_GRAFT_BENCH_OUT: the summary with every
+    * key's seconds in place of the key count. */
+  def record(results: Seq[(String, Double)], failed: Seq[String], sf: String,
+      load: (Double, Double)): String =
+    summary(results, failed, sf, load, "queries" -> ListMap(results: _*))
+
+  private def summary(results: Seq[(String, Double)], failed: Seq[String], sf: String,
+      load: (Double, Double), detail: (String, Any)): String =
+    Harness.json(ListMap("metric" -> "total", "value" -> results.map(_._2).filter(_ >= 0).sum,
+      "unit" -> "sec", detail, "failed" -> failed, "sf" -> sf,
+      "load" -> ListMap("start" -> load._1, "end" -> load._2),
+      "contended" -> contended(load)))
+
+  /** A start load past 2.0 means another multi-core job owned part of the
+    * CPU while the keys were timed. The flag is advisory: the record is
+    * still written, but no reader should mistake it for a perf record. */
+  private def contended(load: (Double, Double)): Boolean = load._1 >= 2.0
+
+  private def loadAvg(): Double =
+    try new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("/proc/loadavg")), "UTF-8").split(" ")(0).toDouble
+    catch { case _: Throwable => -1.0 }
 }

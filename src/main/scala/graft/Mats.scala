@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import scala.util.control.NonFatal
 
 /** Per-key materialization bookkeeping (optimization rounds 18/19).
   *
@@ -28,9 +29,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     100 TB target) the checkpoint engages and the upstream runs once.
   *     Only safe for DETERMINISTIC relations (all registry intermediates
   *     are): inlining vs materializing then yields identical results.
-  *   - Every materialization is TRACKED, and the harness mains (Bench,
-  *     Verify, Profile) call [[release]] at key boundaries, so a key's
-  *     blocks never outlive the key. Genuinely cross-key relations (the
+  *   - Every materialization is TRACKED, and [[Harness.run]] calls
+  *     [[release]] after every key, so a key's blocks never outlive the
+  *     key. The queue is global: it relies on `Harness.run` refusing to
+  *     run two keys at once. Genuinely cross-key relations (the
   *     supply-graph edge cache, the converged-component memo, the shared
   *     shingle caches) deliberately do NOT go through this tracker.
   *
@@ -44,14 +46,15 @@ object Mats {
   private val dirBytes =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Total bytes of the source parquet dir (filesystem metadata only,
-    * memoized per path). */
-  def inputBytes(dir: String): Long =
+  /** Total bytes of the source parquet dir, from the metadata of whichever
+    * Hadoop `FileSystem` serves its URI (local, `hdfs://`, `s3a://`, ...),
+    * memoized per path. A dir that cannot be read sizes as 0. */
+  def inputBytes(s: SparkSession, dir: String): Long =
     dirBytes.computeIfAbsent(dir, { d =>
-      def size(f: java.io.File): Long =
-        if (f.isDirectory) Option(f.listFiles()).map(_.map(size).sum).getOrElse(0L)
-        else f.length()
-      java.lang.Long.valueOf(size(new java.io.File(d)))
+      val p = new org.apache.hadoop.fs.Path(d)
+      java.lang.Long.valueOf(
+        try p.getFileSystem(s.sessionState.newHadoopConf()).getContentSummary(p).getLength
+        catch { case NonFatal(_) => 0L })
     }).longValue()
 
   private def threshold(s: SparkSession): Long =
@@ -59,9 +62,13 @@ object Mats {
       .map(_.toLong).getOrElse(64L * 1024 * 1024)
 
   /** True when the source data is large enough that materializing a
-    * multiply-referenced intermediate beats re-running its upstream. */
-  def materializeAt(s: SparkSession, d: String): Boolean =
-    inputBytes(d) >= threshold(s)
+    * multiply-referenced intermediate beats re-running its upstream. A size
+    * of 0 (an empty or unreadable dir) also materializes: an unknown size
+    * must not silently switch materialization off at the scale it is for. */
+  def materializeAt(s: SparkSession, d: String): Boolean = {
+    val n = inputBytes(s, d)
+    n == 0 || n >= threshold(s)
+  }
 
   /** Record the checkpoint RDD(s) backing `df` for release at the next key
     * boundary. */
@@ -105,7 +112,7 @@ object Mats {
   }
 
   /** Free every materialization tracked since the last release (called by
-    * the harness mains between registry keys). */
+    * [[Harness.run]] after every key). */
   def release(): Unit = {
     var f = tracked.poll()
     while (f != null) {

@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round profiling harness (guide §1: measure first).
   *
-  * Usage: runMain graft.Profile <sfDir> <outDir> <key1,key2,...|ALL>
+  * Usage: runMain graft.Profile <sfDir> <outDir> [key1,key2,...|ALL] [plan]
   *
-  * For each selected registry key, measures with the noop sink (guide §1.4):
+  * Keys default to SPARK_GRAFT_KEYS, or all of them. For each selected
+  * registry key, measures with the noop sink (guide §1.4):
   *   - build_s   — driver-side DataFrame construction (op fn body)
   *   - plan_s    — analysis + optimization + physical planning
   *   - exec1_s   — first noop-write materialization (includes codegen)
@@ -14,66 +13,47 @@ import org.apache.spark.sql.SparkSession
   * and writes `<outDir>/<key>.txt` with the `explain("formatted")` output so
   * plan claims (Exchange count, join strategy, PushedFilters) are on record.
   * Emits one JSON line per key on stdout, prefixed PROFILE so it greps out.
+  * The `plan` mode skips both executions and only builds, plans and dumps.
   *
   * Measurement-only: never registered in SparkEntry, never run by the
   * driver; it exists so OPTIMIZATION_r18.md numbers are reproducible.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val outDir = if (args.length > 1) args(1) else "/tmp/graft_plans"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // A/B knob for shuffle-partition experiments (measurement-only; the
-    // real bench always uses the Bench main's own settings)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_PROFILE_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    val keys: Seq[String] =
-      if (args.length > 2 && args(2) != "ALL") args(2).split(",").map(_.trim).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
+    val sfDir = args(0)
+    val outDir = args(1)
+    val keys = Harness.keys(args.lift(2).filter(_ != "ALL")
+      .orElse(sys.env.get("SPARK_GRAFT_KEYS")))
+    val planOnly = args.lift(3).contains("plan")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    if (keys.exists(k => k.startsWith("stream_tws") || k.startsWith("scan_state_store")))
-      graft.streaming.StreamOps.warmRocksDb(spark)
-    keys.foreach { k =>
-      SparkEntry.queries.get(k) match {
-        case None => System.err.println(s"PROFILE SKIP unknown key $k")
-        case Some(fn) =>
-          spark.sparkContext.setJobDescription(s"profile:$k")
-          val planOnly = sys.env.get("SPARK_GRAFT_PROFILE_PLANONLY")
-            .contains("1")
-          val t0 = System.nanoTime()
-          val df = fn(spark, sfDir)
-          val t1 = System.nanoTime()
-          val planned = df.queryExecution.executedPlan // force planning
-          val t2 = System.nanoTime()
-          if (!planOnly) df.write.format("noop").mode("overwrite").save()
-          val t3 = System.nanoTime()
-          if (!planOnly) df.write.format("noop").mode("overwrite").save()
-          val t4 = System.nanoTime()
-          // formatted explain AFTER execution: with AQE the executedPlan
-          // object above is pre-adaptive; the string form still records
-          // scan pushdown, join strategy and Exchange placement
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(outDir, s"$k.txt"),
-            txt.getBytes("UTF-8"))
-          val nEx = "Exchange".r.findAllIn(txt).size
-          def s(a: Long, b: Long) = math.round((b - a) / 1e6) / 1e3
-          println(s"""PROFILE {"key":"$k","build_s":${s(t0, t1)},""" +
-            s""""plan_s":${s(t1, t2)},"exec1_s":${s(t2, t3)},""" +
-            s""""exec2_s":${s(t3, t4)},"exchanges":$nEx,""" +
-            s""""nodes":${planned.collectLeaves().size}}""")
-          // per-key materializations must not outlive the key
-          Mats.release()
+    Harness.withSession(keys) { spark =>
+      val q = SparkEntry.queries
+      Harness.run(keys) { k =>
+        spark.sparkContext.setJobDescription(s"profile:$k")
+        val t0 = System.nanoTime()
+        val df = q(k)(spark, sfDir)
+        val t1 = System.nanoTime()
+        val planned = df.queryExecution.executedPlan // force planning
+        val t2 = System.nanoTime()
+        if (!planOnly) df.write.format("noop").mode("overwrite").save()
+        val t3 = System.nanoTime()
+        if (!planOnly) df.write.format("noop").mode("overwrite").save()
+        val t4 = System.nanoTime()
+        // formatted explain AFTER execution: with AQE the executedPlan
+        // object above is pre-adaptive; the string form still records
+        // scan pushdown, join strategy and Exchange placement
+        val txt = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(outDir, s"$k.txt"),
+          txt.getBytes("UTF-8"))
+        val nEx = "Exchange".r.findAllIn(txt).size
+        def s(a: Long, b: Long) = math.round((b - a) / 1e6) / 1e3
+        println(s"""PROFILE {"key":"$k","build_s":${s(t0, t1)},""" +
+          s""""plan_s":${s(t1, t2)},"exec1_s":${s(t2, t3)},""" +
+          s""""exec2_s":${s(t3, t4)},"exchanges":$nEx,""" +
+          s""""nodes":${planned.collectLeaves().size}}""")
       }
     }
-    spark.stop()
   }
 }

@@ -58,17 +58,8 @@ object Tables {
       // and the test corpora land as ONE single-row-group parquet file,
       // which caps the whole map side of every text/dedup key at one core
       // no matter the session's parallelism (measured: the raw shingle
-      // explode alone was 2.7 s single-threaded at sf0.1). When the scan
-      // yields fewer splits than half the scheduler's parallelism, spread
-      // rows with a deterministic hash on doc_id; with a real multi-file
-      // corpus the condition is false and NO exchange is added (scale-
-      // adaptive, guide §2 — results are unaffected either way).
-      import org.apache.spark.sql.functions.col
-      val df = spark.read.parquet(s"$dir/$name.parquet")
-      val par = spark.sparkContext.defaultParallelism
-      if (df.queryExecution.toRdd.getNumPartitions * 2 < par)
-        df.repartition(par, col("doc_id"))
-      else df
+      // explode alone was 2.7 s single-threaded at sf0.1).
+      widen(spark, spark.read.parquet(s"$dir/$name.parquet"), "doc_id")
     } else if (name == "events") {
       // events.ts has shipped under two physical schemas: nanosecond int64
       // (which Spark 4 only reads with nanosAsLong) and timestamp[us] with

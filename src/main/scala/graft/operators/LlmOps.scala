@@ -47,10 +47,6 @@ object LlmOps {
   private def shingles(s: SparkSession, d: String): DataFrame =
     shinglesFrom(t(s, d, "documents"))
 
-  /** Measurement-only accessor for PerfProbe (uncached raw shingle stream). */
-  private[graft] def shinglesForProbe(docs: DataFrame): DataFrame =
-    shinglesFrom(docs)
-
   /** Document-frequency cap for the exact-Jaccard shingle self-join: a
     * shingle shared by more than this many documents ("of the and"-style
     * boilerplate) is dropped before candidate generation, the same skew

@@ -1,19 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Scale-proof runner (dev tool, test tree like [[PerfProbe]]): executes a
-  * named set of registry keys against a scaled-up data dir (see
-  * `tools/gen_sf.py`) WITHOUT dumping row-level output — each result is
-  * materialized once through an aggregate pass that records the invariant
-  * evidence the sf10 gate checks (`tools/check_sf10.py`):
+/** Scale-proof runner (dev tool, test tree): executes a named set of
+  * registry keys against a scaled-up data dir (see `tools/gen_sf.py`)
+  * WITHOUT dumping row-level output — each result is materialized once
+  * through an aggregate pass that records the invariant evidence the sf10
+  * gate checks (`tools/check_sf10.py`):
   *
   *   - row count (for the ×N / == recurrence rules vs a reference run),
   *   - per-numeric-column min / max / null count (overflow canaries: a
   *     BIGINT count or sum that wrapped shows up as a negative min; a
-  *     DOUBLE that blew up shows as Inf/NaN),
+  *     DOUBLE that blew up shows as Inf/NaN, written as a JSON string),
   *   - wall-clock seconds (the scale-shape evidence).
   *
   * Usage:
@@ -23,83 +24,42 @@ import org.apache.spark.sql.types._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val Array(dir, outFile, keyCsv) = args
-    val keys = keyCsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val sb = new StringBuilder("{")
-    var first = true
-    keys.foreach { k =>
-      val fn = SparkEntry.queries.getOrElse(k,
-        sys.error(s"unknown registry key: $k"))
-      System.err.println(s"[scaleprobe] $k ...")
-      val t0 = System.nanoTime()
-      val cell =
-        try {
-          val df = fn(spark, dir)
-          val numeric = df.schema.fields.filter(f => f.dataType match {
-            case _: NumericType => true
-            case _              => false
-          }).map(_.name)
-          val aggs = count(lit(1)).as("n") +:
-            numeric.flatMap(c => Seq(
-              min(col(c)).cast("double").as(s"min__$c"),
-              max(col(c)).cast("double").as(s"max__$c"),
-              sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls__$c")))
-          val r = df.agg(aggs.head, aggs.tail.toIndexedSeq: _*).first()
-          val secs = (System.nanoTime() - t0) / 1e9
-          val cols = numeric.zipWithIndex.map { case (c, i) =>
-            val base = 1 + i * 3
-            val mn = if (r.isNullAt(base)) "null" else r.getDouble(base).toString
-            val mx = if (r.isNullAt(base + 1)) "null"
-                     else r.getDouble(base + 1).toString
-            // sum() over an EMPTY result is NULL (a 0-row key is legal —
-            // window_sma_cross legitimately has zero crossings at sf10)
-            val nn = if (r.isNullAt(base + 2)) 0L else r.getLong(base + 2)
-            s""""$c":{"min":${jNum(mn)},"max":${jNum(mx)},"nulls":$nn}"""
-          }.mkString(",")
-          s"""{"ok":true,"secs":${f(secs)},"rows":${r.getLong(0)},""" +
-            s""""cols":{$cols}}"""
-        } catch { case e: Throwable =>
-          val secs = (System.nanoTime() - t0) / 1e9
-          System.err.println(s"[scaleprobe] $k FAILED: " +
-            s"${e.getClass.getName}: ${e.getMessage}")
-          s"""{"ok":false,"secs":${f(secs)},"error":${jStr(
-            s"${e.getClass.getName}: ${e.getMessage}")}}"""
-        }
-      if (!first) sb.append(",")
-      first = false
-      sb.append(jStr(k)).append(":").append(cell)
-      System.err.println(s"[scaleprobe] $k done")
+    val keys = Harness.keys(Some(keyCsv))
+    val outcomes = Harness.withSession(keys) { spark =>
+      val q = SparkEntry.queries
+      Harness.run(keys) { k =>
+        System.err.println(s"[scaleprobe] $k ...")
+        val df = q(k)(spark, dir)
+        val numeric = df.schema.fields.filter(f => f.dataType match {
+          case _: NumericType => true
+          case _              => false
+        }).map(_.name)
+        val aggs = count(lit(1)).as("n") +:
+          numeric.flatMap(c => Seq(
+            min(col(c)).cast("double").as(s"min__$c"),
+            max(col(c)).cast("double").as(s"max__$c"),
+            sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls__$c")))
+        val r = df.agg(aggs.head, aggs.tail.toIndexedSeq: _*).first()
+        def num(i: Int): Any = if (r.isNullAt(i)) null else r.get(i)
+        (r.getLong(0), ListMap(numeric.zipWithIndex.map { case (c, i) =>
+          // sum() over an EMPTY result is NULL (a 0-row key is legal —
+          // window_sma_cross legitimately has zero crossings at sf10)
+          c -> ListMap("min" -> num(1 + i * 3), "max" -> num(2 + i * 3),
+            "nulls" -> Option(num(3 + i * 3)).getOrElse(0L))
+        }.toIndexedSeq: _*))
+      }
     }
-    sb.append("}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (sb.toString + "\n").getBytes("UTF-8"))
+    val cells = outcomes.map { o =>
+      val secs = math.round(o.secs * 1000) / 1000.0
+      o.key -> (o.result match {
+        case Right((rows, cols)) =>
+          ListMap("ok" -> true, "secs" -> secs, "rows" -> rows, "cols" -> cols)
+        case Left(e) =>
+          ListMap("ok" -> false, "secs" -> secs, "error" -> s"${e.getClass.getName}: ${e.getMessage}")
+      })
+    }
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
+      Harness.json(ListMap(cells: _*)) + "\n")
     println(s"[scaleprobe] wrote $outFile (${keys.length} keys)")
-    spark.stop()
   }
-
-  private def f(d: Double): String = "%.3f".format(d)
-
-  /** JSON-legal numeric cell: Infinity/NaN (legal Scala doubles, illegal
-    * JSON) are stringified so the canary survives json.load. */
-  private def jNum(s: String): String =
-    if (s == "null") "null"
-    else if (s.exists(c => c.isLetter && c != 'E' && c != 'e')) jStr(s)
-    else s
-
-  private def jStr(s: String): String = "\"" + s.flatMap {
-    case '"'          => "\\\""
-    case '\\'         => "\\\\"
-    case '\n'         => "\\n"
-    case '\r'         => "\\r"
-    case '\t'         => "\\t"
-    case c if c < ' ' => "\\u%04x".format(c.toInt)
-    case c            => c.toString
-  } + "\""
 }

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Machine-checkable per-key bench diff between two round-stamped per-key
-records (tools/bench_perkey_r{N}.json, written by graft.Bench when
-SPARK_GRAFT_BENCH_TAG is set; bench_result.json has the same shape).
+records (e.g. tools/bench_perkey_r{N}.json, written by graft.Bench when
+SPARK_GRAFT_BENCH_OUT=tools/bench_perkey_r{N}.json; bench_result.json, the
+default, has the same shape).
 
 Prints keys added/removed and every key whose wall-clock moved more than
 --threshold (ratio, default 1.5x) AND more than --floor seconds (default

@@ -31,7 +31,7 @@ ROT="${GRAFT_SF1_ROTATION:-$(ls CORRECTNESS_r*.json 2>/dev/null | wc -l)}"
 mkdir -p "$OUT"
 # dump oracle_sql.json first (cheap single-key Verify run) so the sample
 # can be computed from the REGISTRY, not from a stale dump
-SPARK_GRAFT_VERIFY_KEYS="scan_parquet" \
+SPARK_GRAFT_KEYS="scan_parquet" \
   sbt -batch "runMain graft.Verify $SF_DIR $OUT" >/dev/null 2>&1
 SAMPLE=$(python3 - "$OUT" "$ROT" "$@" <<'EOF'
 import json, sys
@@ -47,7 +47,7 @@ EOF
 )
 echo "[gate_sf1] rotation=$ROT keys: $SAMPLE" | tee "$LOG"
 
-SPARK_GRAFT_VERIFY_KEYS="$SAMPLE" \
+SPARK_GRAFT_KEYS="$SAMPLE" \
   sbt -batch "runMain graft.Verify $SF_DIR $OUT" 2>&1 | tail -3 | tee -a "$LOG"
 python3 tools/check_sf1.py "$SF_DIR" "$OUT" $(echo "$SAMPLE" | tr ',' ' ') \
   2>&1 | tee -a "$LOG"

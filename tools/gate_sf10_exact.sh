@@ -33,7 +33,7 @@ fi
 ROT="${GRAFT_SF10_ROTATION:-$(ls CORRECTNESS_r*.json 2>/dev/null | wc -l)}"
 mkdir -p "$OUT"
 # registry dump first so the sample derives from the CURRENT key set
-SPARK_GRAFT_VERIFY_KEYS="scan_parquet" \
+SPARK_GRAFT_KEYS="scan_parquet" \
   sbt -batch "runMain graft.Verify $SF_DIR $OUT" >/dev/null 2>&1
 SAMPLE=$(python3 - "$OUT" "$ROT" "$@" <<'EOF'
 import json, re, sys
@@ -64,7 +64,7 @@ EOF
 )
 echo "[gate_sf10] rotation=$ROT keys: $SAMPLE" | tee "$LOG"
 
-SPARK_GRAFT_VERIFY_KEYS="$SAMPLE" \
+SPARK_GRAFT_KEYS="$SAMPLE" \
   sbt -batch "runMain graft.Verify $SF_DIR $OUT" 2>&1 | tail -3 | tee -a "$LOG"
 
 PASS=0; FAIL=0; TMO=0

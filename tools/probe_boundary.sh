@@ -25,7 +25,7 @@ python3 tools/gen_boundary.py --out "$DIR"
 
 mkdir -p "$OUT"
 T0=$(date +%s)
-SPARK_GRAFT_VERIFY_KEYS="dedup_clusters,dedup_minhash_star" \
+SPARK_GRAFT_KEYS="dedup_clusters,dedup_minhash_star" \
   sbt -batch "runMain graft.Verify $DIR $OUT" 2>&1 | tail -3
 T1=$(date +%s)
 

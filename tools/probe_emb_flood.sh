@@ -41,7 +41,7 @@ EOF
 
 mkdir -p "$OUT"
 T0=$(date +%s)
-SPARK_DRIVER_MEM=16g SPARK_GRAFT_VERIFY_KEYS="dedup_embedding_clusters,emb_knn_graph,emb_hubness_ann" \
+SPARK_DRIVER_MEM=16g SPARK_GRAFT_KEYS="dedup_embedding_clusters,emb_knn_graph,emb_hubness_ann" \
   sbt -batch "runMain graft.Verify $DIR $OUT" 2>&1 | tail -2
 T1=$(date +%s)
 

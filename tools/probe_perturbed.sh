@@ -35,7 +35,7 @@ fi
 
 mkdir -p "$OUT"
 T0=$(date +%s)
-SPARK_GRAFT_VERIFY_KEYS="dedup_clusters,dedup_exact,dedup_ngram_jaccard" \
+SPARK_GRAFT_KEYS="dedup_clusters,dedup_exact,dedup_ngram_jaccard" \
   sbt -batch "runMain graft.Verify $DIR $OUT" 2>&1 | tail -3
 T1=$(date +%s)
 
