@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -293,14 +293,9 @@ final class IngestionRunner(spark: SparkSession, cfg: IngestionConfig) {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${c.qualifiedDatabase}")
   }
 
-  private def readBatch(c: IngestionConfig): DataFrame = {
-    // A4 (framework.py:144-151): options loop + optional explicit schema
-    var r = spark.read.options(c.options)
-    c.schema.foreach(s => r = r.schema(s))
-    if (c.schema.isEmpty && c.sourceFormat != "parquet")
-      r = r.option("inferSchema", "true")
-    r.format(c.sourceFormat).load(c.sourcePath)
-  }
+  // A4 (framework.py:144-151): options loop + optional explicit schema
+  private def readBatch(c: IngestionConfig): DataFrame =
+    LandingRead.load(spark, c.sourceFormat, c.options, Seq(c.sourcePath), c.schema)
 
   /** `clusterBy` columns the batch cannot supply. A merge also keeps the
     * target's columns (schema evolution backfills what the source lacks),
@@ -783,38 +778,22 @@ final class IngestionRunner(spark: SparkSession, cfg: IngestionConfig) {
     val lfs = fsFor(landing)
     // recursive: landing dirs are often nested (date=.../part-*.json) —
     // the stream source itself reads them, so inference must see them too.
-    // Files under hidden (_ or .) path segments are metadata, not data.
-    // The walk stops at the QUALIFIED landing root: listFiles returns
-    // fully-qualified paths (file:/... / hdfs://...), so comparing against
-    // the raw sourcePath string would never match — the walk would climb
-    // into ancestors and a landing dir with a _/. segment anywhere above
-    // it would mark EVERY file hidden.
-    val landingQ = lfs.makeQualified(landing)
-    def hiddenUnder(p: Path): Boolean = {
-      var cur = p
-      while (cur != null && cur != landingQ) {
-        if (cur.getName.startsWith("_") || cur.getName.startsWith(".")) return true
-        cur = cur.getParent
-      }
-      false
-    }
-    val all = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    if (lfs.exists(landing)) {
-      val it = lfs.listFiles(landing, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && !hiddenUnder(st.getPath))
-          all += ((st.getPath.toString, st.getModificationTime))
-      }
-    }
-    val fresh = all.filter(_._2 >= since)
-    val inferred: Option[StructType] =
-      if (fresh.isEmpty) None
-      else {
-        var r = spark.read.options(c.options)
-        if (c.sourceFormat == "csv") r = r.option("inferSchema", "true")
-        Some(r.format(c.sourceFormat).load(fresh.map(_._1).toSeq: _*).schema)
-      }
+    // An entry with a hidden (_ or .) name below the landing root is
+    // metadata, not data: the walk skips it and everything under it.
+    // listStatus, not listFiles: on a local filesystem without native
+    // Hadoop, every LocatedFileStatus that listFiles builds forks an
+    // `ls -ld` for its permissions.
+    def walk(dir: Path): Iterator[FileStatus] =
+      lfs.listStatus(dir).iterator
+        .filterNot(st => st.getPath.getName.startsWith("_") ||
+          st.getPath.getName.startsWith("."))
+        .flatMap(st => if (st.isDirectory) walk(st.getPath) else Iterator(st))
+    val fresh =
+      if (lfs.exists(landing)) walk(landing).filter(_.getModificationTime >= since).toSeq
+      else Nil
+    val inferred: Option[StructType] = Option.when(fresh.nonEmpty)(
+      LandingRead.load(spark, c.sourceFormat, c.options,
+        fresh.map(_.getPath.toString)).schema)
     val merged = (prev, inferred) match {
       case (Some(p), Some(i)) => StructType(p.fields ++
         i.fields.filterNot(x => p.fieldNames.contains(x.name)))
@@ -823,11 +802,16 @@ final class IngestionRunner(spark: SparkSession, cfg: IngestionConfig) {
       case (None, None) => throw new IllegalArgumentException(
         s"stream ${c.fullTableName}: no schema given and no files in ${c.sourcePath} to infer one")
     }
-    val out = fs.create(schemaPath, true)
-    try out.write(merged.json.getBytes("UTF-8")) finally out.close()
+    // the schema file changes only when the schema does; the watermark
+    // moves whenever fresh files were seen
+    if (!prev.contains(merged)) {
+      val out = fs.create(schemaPath, true)
+      try out.write(merged.json.getBytes("UTF-8")) finally out.close()
+    }
     if (fresh.nonEmpty) {
       val wm = fs.create(wmPath, true)
-      try wm.write(fresh.map(_._2).max.toString.getBytes("UTF-8")) finally wm.close()
+      try wm.write(fresh.map(_.getModificationTime).max.toString.getBytes("UTF-8"))
+      finally wm.close()
     }
     merged
   }

@@ -504,6 +504,40 @@ class PipelineSpec extends AnyFunSuite with TimeLimits {
     } finally sc.clearJobGroup()
   }
 
+  test("a schema-less parquet append starts exactly one Spark job") {
+    val db = "graft_it"
+    spark.sql(s"DROP TABLE IF EXISTS $db.region_jobs")
+    val cfg = IngestionConfig(db, "region_jobs", srcDir)
+    // the write is the only job: the landing schema comes from one footer
+    // read on the driver, not from Spark's inference job
+    for (_ <- 1 to 2)
+      assert(jobsOf(assert(new IngestionRunner(spark, cfg).run() === Right(5L))) === 1)
+  }
+
+  test("a merge into an existing table starts only the merge's own jobs") {
+    val db = "graft_it"
+    spark.sql(s"DROP TABLE IF EXISTS $db.region_mjobs")
+    val cfg = IngestionConfig(db, "region_mjobs", srcDir,
+      writeMode = WriteMode.Merge(Seq("r_regionkey")))
+    assert(new IngestionRunner(spark, cfg).run() === Right(5L))
+    assert(jobsOf(assert(new IngestionRunner(spark, cfg).run() === Right(5L))) === 3)
+  }
+
+  test("a schema-less stream drain starts no job on the caller's thread") {
+    import spark.implicits._
+    val db = "graft_it"
+    spark.sql(s"DROP TABLE IF EXISTS $db.stream_jobs")
+    val land = tmp("g_sjobs_land_")
+    Seq(("r1", 1L), ("r2", 2L)).toDF("name", "v").coalesce(1)
+      .write.mode("append").parquet(land)
+    val cfg = IngestionConfig(db, "stream_jobs", land,
+      ingestMode = IngestMode.Stream(tmp("g_sjobs_ck_")),
+      targetPath = Some(tmp("g_sjobs_tgt_")))
+    // micro-batches run in the query's own job group; the schema tracking
+    // reads its footer on the driver
+    assert(jobsOf(assert(new IngestionRunner(spark, cfg).run() === Right(2L))) === 0)
+  }
+
   test("concurrent appends on one session each count only their own rows") {
     val db = "graft_it"
     val nationDir = tmp("g_pipe_nation_")
@@ -668,6 +702,34 @@ class PipelineSpec extends AnyFunSuite with TimeLimits {
       "the backdated file still streams in (discovery is the checkpoint's job)")
     assert(spark.table(s"$db.bounded_s").columns.toSet === Set("name", "v"),
       "schema must not evolve from a file older than the last commit")
+  }
+
+  test("schema tracking rewrites its schema only on change, its watermark on every fresh file") {
+    import spark.implicits._
+    val db = "graft_it"
+    spark.sql(s"DROP TABLE IF EXISTS $db.steady_s")
+    val land = tmp("g_steady_land_"); val ck = tmp("g_steady_ck_")
+    def land1(name: String) = {
+      Seq((name, 1L)).toDF("name", "v").coalesce(1).write.mode("append").parquet(land)
+      new java.io.File(land).listFiles().filter(_.getName.endsWith(".parquet"))
+        .map(_.lastModified).max
+    }
+    val schemaFile = new java.io.File(ck, "graft_schema.json")
+    def watermark =
+      new String(java.nio.file.Files.readAllBytes(
+        new java.io.File(ck, "graft_schema_mtime").toPath), "UTF-8").trim.toLong
+    val cfg = IngestionConfig(db, "steady_s", land,
+      ingestMode = IngestMode.Stream(ck), targetPath = Some(tmp("g_steady_tgt_")))
+    land1("r1")
+    assert(new IngestionRunner(spark, cfg).run() === Right(1L))
+    schemaFile.setLastModified(1000L)
+    // a later mtime for the second file, so a watermark left at the first
+    // file's mtime reads as stale
+    Thread.sleep(50)
+    val newest = land1("r2")
+    assert(new IngestionRunner(spark, cfg).run() === Right(1L))
+    assert(schemaFile.lastModified === 1000L, "an unchanged schema was rewritten")
+    assert(watermark === newest, "the watermark did not move to the fresh file")
   }
 
   test("csv source ingests with header + inference (A4 csv path)") {

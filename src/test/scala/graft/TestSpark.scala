@@ -17,4 +17,15 @@ object TestSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Spark jobs `body` starts, counted under a job group the caller sets,
+    * the way a harness runs a key. */
+  def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "job count", interruptOnCancel = false)
+    try body finally sc.clearJobGroup()
+    org.apache.spark.GraftTestBus.drain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
 }
