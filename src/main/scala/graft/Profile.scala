@@ -7,6 +7,8 @@ package graft
   * Keys default to SPARK_GRAFT_KEYS, or all of them. For each selected
   * registry key, measures with the noop sink (guide §1.4):
   *   - build_s   — driver-side DataFrame construction (op fn body)
+  *   - build_jobs — Spark jobs the op fn body starts (eager work), counted
+  *     under a job group of its own after the listener bus drains
   *   - plan_s    — analysis + optimization + physical planning
   *   - exec1_s   — first noop-write materialization (includes codegen)
   *   - exec2_s   — second noop-write (warm: codegen cache + file listing hot)
@@ -28,11 +30,17 @@ object Profile {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     Harness.withSession(keys) { spark =>
       val q = SparkEntry.queries
+      val sc = spark.sparkContext
       Harness.run(keys) { k =>
-        spark.sparkContext.setJobDescription(s"profile:$k")
+        val buildGroup = s"profile-build:$k"
+        sc.setJobGroup(buildGroup, s"profile:$k", interruptOnCancel = false)
         val t0 = System.nanoTime()
-        val df = q(k)(spark, sfDir)
+        val df = try q(k)(spark, sfDir) finally sc.clearJobGroup()
         val t1 = System.nanoTime()
+        org.apache.spark.GraftBus.drain(sc)
+        val buildJobs = sc.statusTracker.getJobIdsForGroup(buildGroup).length
+        sc.setJobDescription(s"profile:$k")
+        val t1b = System.nanoTime()
         val planned = df.queryExecution.executedPlan // force planning
         val t2 = System.nanoTime()
         if (!planOnly) df.write.format("noop").mode("overwrite").save()
@@ -50,7 +58,7 @@ object Profile {
         val nEx = "Exchange".r.findAllIn(txt).size
         def s(a: Long, b: Long) = math.round((b - a) / 1e6) / 1e3
         println(s"""PROFILE {"key":"$k","build_s":${s(t0, t1)},""" +
-          s""""plan_s":${s(t1, t2)},"exec1_s":${s(t2, t3)},""" +
+          s""""build_jobs":$buildJobs,"plan_s":${s(t1b, t2)},"exec1_s":${s(t2, t3)},""" +
           s""""exec2_s":${s(t3, t4)},"exchanges":$nEx,""" +
           s""""nodes":${planned.collectLeaves().size}}""")
       }

@@ -59,7 +59,7 @@ object Tables {
       // which caps the whole map side of every text/dedup key at one core
       // no matter the session's parallelism (measured: the raw shingle
       // explode alone was 2.7 s single-threaded at sf0.1).
-      widen(spark, spark.read.parquet(s"$dir/$name.parquet"), "doc_id")
+      widen(spark, parquet(spark, dir, name), "doc_id")
     } else if (name == "events") {
       // events.ts has shipped under two physical schemas: nanosecond int64
       // (which Spark 4 only reads with nanosAsLong) and timestamp[us] with
@@ -69,8 +69,9 @@ object Tables {
       // resolves the file to and both engines order/bucket identically.
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+      // set before the read: the footer decode follows the session's value
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = parquet(spark, dir, name)
       raw.schema("ts").dataType match {
         case LongType =>
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000L")))
@@ -80,8 +81,18 @@ object Tables {
           raw
       }
     } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+      parquet(spark, dir, name)
     }
+  }
+
+  /** `spark.read.parquet` of one table, with its schema decoded from the
+    * file's footer on the driver ([[graft.pipeline.LandingRead.footerRead]])
+    * instead of in Spark's schema-inference job; Spark's reader where that
+    * read declines. */
+  private def parquet(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    graft.pipeline.LandingRead.footerRead(spark, Map.empty, Seq(path))
+      .getOrElse(spark.read.parquet(path))
   }
 }
 

@@ -453,51 +453,49 @@ object StatsMlOps {
   // quasi-identifier group (market segment), the Earth-Mover's Distance
   // between the group's sensitive-attribute distribution (account-balance
   // decile) and the GLOBAL one, over the ordered buckets:
-  // EMD = Σₖ |cumP − cumQ| / (B−1). The grid densifies missing buckets
-  // with an explicit (segment × bucket) frame so cumulative sums align;
-  // counts stay exact BIGINT, each |Δcdf| term quantizes to 1e9 before
-  // the sum. All joins after the one scan are on ≤ 50-row relations —
-  // broadcast. A release gate would reject segments with t > threshold.
+  // EMD = Σₖ |cumP − cumQ| / (B−1), summed over the buckets k < 9 that hold
+  // any row globally. customer is scanned twice: once for the min/max, once
+  // for ONE aggregate of per-segment bucket counts (a row per segment); the
+  // global counts are sums over those few rows, collected into one row with
+  // them, and the cumulative sums are array folds, so nothing joins back to
+  // the scan and no window runs on one partition. Counts stay exact BIGINT,
+  // each |Δcdf| term quantizes to 1e9 before the sum. A null segment counts
+  // toward the global distribution but gets no row; a null balance lands in
+  // bucket 9 (LEAST skips nulls). A release gate would reject segments with
+  // t > threshold.
   private val privacyTcloseness = Op(
     "privacy_tcloseness",
     (s, d) => {
       t(s, d, "customer").createOrReplaceTempView("customer_tc")
-      s.sql("""
+      def buckets(f: Int => String) = (0 to 9).map(f).mkString(", ")
+      def cum(a: String) =
+        s"transform(sequence(0, 8), k -> aggregate(slice($a, 1, k + 1), 0L, (x, y) -> x + y))"
+      s.sql(s"""
         WITH mm AS (SELECT MIN(c_acctbal) AS lo, MAX(c_acctbal) AS hi
                     FROM customer_tc),
              b AS (SELECT c_mktsegment AS seg,
                           LEAST(CAST(FLOOR((c_acctbal - lo) / (hi - lo) * 10)
                                      AS INT), 9) AS bkt
                    FROM customer_tc CROSS JOIN mm),
-             g AS (SELECT seg, bkt, CAST(COUNT(*) AS BIGINT) AS c
-                   FROM b GROUP BY 1, 2),
-             gl AS (SELECT bkt, CAST(SUM(c) AS BIGINT) AS gc
-                    FROM g GROUP BY 1),
-             grid AS (SELECT s.seg, k.bkt, COALESCE(g.c, 0L) AS c, gl.gc
-                      FROM (SELECT DISTINCT seg FROM g) s
-                      CROSS JOIN (SELECT DISTINCT bkt FROM gl) k
-                      LEFT JOIN g ON g.seg = s.seg AND g.bkt = k.bkt
-                      JOIN gl ON gl.bkt = k.bkt),
-             tots AS (SELECT seg, CAST(SUM(c) AS BIGINT) AS n
-                      FROM grid GROUP BY 1),
-             gtot AS (SELECT CAST(SUM(gc) AS BIGINT) AS gn FROM gl),
-             cum AS (SELECT seg, bkt,
-                            CAST(SUM(c) OVER (PARTITION BY seg
-                                              ORDER BY bkt) AS BIGINT) AS cc,
-                            CAST(SUM(gc) OVER (PARTITION BY seg
-                                               ORDER BY bkt) AS BIGINT) AS cg
-                     FROM grid),
-             emd AS (SELECT c1.seg,
-                            CAST(SUM(CAST(round(abs(CAST(cc AS DOUBLE) / t.n
-                                               - CAST(cg AS DOUBLE) / gtot.gn)
-                                                * 1000000000) AS BIGINT))
-                                 AS BIGINT) AS s
-                     FROM cum c1 JOIN tots t ON t.seg = c1.seg
-                     CROSS JOIN gtot
-                     WHERE bkt < 9 GROUP BY 1)
-        SELECT emd.seg AS c_mktsegment, t.n,
-               round(CAST(s AS DOUBLE) / 9000000000.0D, 6) AS t_closeness
-        FROM emd JOIN tots t ON t.seg = emd.seg ORDER BY 1""")
+             h AS (SELECT seg, COUNT(*) AS n,
+                          array(${buckets(k => s"COUNT_IF(bkt = $k)")}) AS c
+                   FROM b GROUP BY seg),
+             tot AS (SELECT SUM(n) AS gn,
+                            array(${buckets(k => s"SUM(c[$k])")}) AS gc,
+                            collect_list(struct(seg, n, c)) AS segs
+                     FROM h),
+             per AS (SELECT inline(segs), gn, gc FROM tot),
+             cum AS (SELECT seg, n, gn, gc, ${cum("c")} AS cc, ${cum("gc")} AS cg
+                     FROM per
+                     WHERE seg IS NOT NULL AND exists(slice(gc, 1, 9), x -> x > 0))
+        SELECT seg AS c_mktsegment, n,
+               round(CAST(aggregate(sequence(0, 8), 0L, (acc, k) -> acc +
+                       IF(gc[k] > 0,
+                          CAST(round(abs(CAST(cc[k] AS DOUBLE) / n
+                                         - CAST(cg[k] AS DOUBLE) / gn)
+                                     * 1000000000) AS BIGINT),
+                          0L)) AS DOUBLE) / 9000000000.0D, 6) AS t_closeness
+        FROM cum ORDER BY 1""")
     },
     Some("""WITH mm AS (SELECT MIN(c_acctbal) AS lo, MAX(c_acctbal) AS hi
                         FROM customer),

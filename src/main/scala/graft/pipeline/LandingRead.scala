@@ -9,7 +9,8 @@ import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.types.StructType
 
 /** How [[IngestionRunner]] reads landing files: its batch read and its
-  * stream's schema tracking both go through [[load]]. */
+  * stream's schema tracking both go through [[load]]. `graft.Tables.load`
+  * reads every registry table through [[footerRead]]. */
 private[graft] object LandingRead {
 
   /** `spark.read.options(options).format(format).load(paths: _*)`, with

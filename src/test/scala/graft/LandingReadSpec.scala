@@ -58,9 +58,6 @@ class LandingReadSpec extends AnyFunSuite {
     }
   }
 
-  /** The sf0.01 reference tables, beside the suite's sf0.001 fixtures. */
-  private val sf0_01 = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
-
   private def partFiles(dir: String): Seq[String] =
     new java.io.File(dir).listFiles().map(_.getPath)
       .filter(_.endsWith(".parquet")).sorted.toSeq

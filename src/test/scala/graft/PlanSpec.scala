@@ -974,4 +974,12 @@ class PlanSpec extends AnyFunSuite {
     val wi = p.indexOf("Window")
     assert(wi >= 0 && p.indexOf("HashAggregate", wi) >= 0, p.take(1200))
   }
+
+  // one scan for the min/max, one for the per-segment bucket counts: the
+  // global distribution and the cumulative sums come from that aggregate,
+  // not from joins that re-inline the scan
+  test("privacy_tcloseness scans customer at most twice") {
+    val p = plan("privacy_tcloseness")
+    assert("Scan parquet".r.findAllIn(p).length <= 2, p.take(1200))
+  }
 }

@@ -45,6 +45,44 @@ class TablesSpec extends AnyFunSuite {
                         "embedding" -> ArrayType(FloatType),
                         "label" -> IntegerType))
 
+  /** The load through `spark.read.parquet`, whose schema comes from
+    * Spark's inference job: the reference the footer read must match. */
+  private def sparkLoad(dir: String, name: String) = {
+    import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    name match {
+      case "documents" => Tables.widen(spark, raw, "doc_id")
+      case "events" => raw.schema("ts").dataType match {
+        case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000L")))
+        case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
+        case _ => raw
+      }
+      case _ => raw
+    }
+  }
+
+  for (name <- Tables.names) {
+    test(s"$name loads at sf0.01 with no Spark job, as Spark's reader would") {
+      assert(jobsOf(Tables.load(spark, sf0_01, name)) === 0)
+      val got = Tables.load(spark, sf0_01, name)
+      val want = sparkLoad(sf0_01, name)
+      assert(got.schema === want.schema)
+      assert(got.queryExecution.toRdd.getNumPartitions ===
+        want.queryExecution.toRdd.getNumPartitions)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      assert(rows(got) === rows(want))
+    }
+  }
+
+  test("documents is widened over as many scan splits as Spark's reader gives") {
+    val splits = spark.read.parquet(s"$sf0_01/documents.parquet")
+      .queryExecution.toRdd.getNumPartitions
+    val footer = graft.pipeline.LandingRead
+      .footerRead(spark, Map.empty, Seq(s"$sf0_01/documents.parquet")).get
+    assert(footer.queryExecution.toRdd.getNumPartitions === splits)
+  }
+
   for (dir <- sfDirs; name <- Tables.names) {
     test(s"$name post-load schema at ${dir.split('/').last}") {
       val schema = Tables.load(spark, dir, name).schema

@@ -5,6 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole suite (sf0.001 fixtures). */
 object TestSpark {
   val sfDir = "/root/testdata/sf0.001"
+  /** The sf0.01 reference tables, beside the suite's sf0.001 fixtures. */
+  val sf0_01: String = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
   lazy val spark: SparkSession = {
     val cpus = sys.env.getOrElse("GRAFT_TEST_CPUS", "8")
     val s = SparkSession.builder()
@@ -25,7 +27,7 @@ object TestSpark {
     val group = s"jobs-${java.util.UUID.randomUUID()}"
     sc.setJobGroup(group, "job count", interruptOnCancel = false)
     try body finally sc.clearJobGroup()
-    org.apache.spark.GraftTestBus.drain(sc)
+    org.apache.spark.GraftBus.drain(sc)
     sc.statusTracker.getJobIdsForGroup(group).length
   }
 }

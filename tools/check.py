@@ -20,9 +20,6 @@ def main():
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
     only = set(sys.argv[3:])
     oracle = json.load(open(f"{out}/oracle_sql.json"))
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
     ok, fail = [], []
     for k in sorted(oracle):
         if only and k not in only:
@@ -34,7 +31,8 @@ def main():
         except Exception as e:
             fail.append((k, f"spark output unreadable: {e}")); continue
         try:
-            ddf = con.sql(oracle[k]).df()
+            with connect(sf, out) as con:
+                ddf = con.sql(oracle[k]).df()
         except Exception as e:
             fail.append((k, f"duckdb error: {e}")); continue
         if sorted(sdf.columns) != sorted(ddf.columns):
@@ -85,6 +83,15 @@ def main():
         for k, why in fail:
             print(f"  {k}: {why}")
         sys.exit(1)
+
+def connect(sf, out):
+    """A fresh DuckDB connection per oracle, so one oracle's memory is
+    released before the next runs. It spills under the output dir, not to
+    DuckDB's default `.tmp` in the working directory."""
+    con = duckdb.connect(config={"temp_directory": f"{out}/duckdb_tmp"})
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    return con
 
 def eq(a, b):
     if a is None or b is None or (isinstance(a, float) and math.isnan(a)):
