@@ -11,6 +11,8 @@ package graft
   *     under a job group of its own after the listener bus drains
   *   - plan_s    — analysis + optimization + physical planning
   *   - exec1_s   — first noop-write materialization (includes codegen)
+  *   - exec_jobs — Spark jobs that first execution starts, counted under a
+  *     job group of its own the way build_jobs is
   *   - exec2_s   — second noop-write (warm: codegen cache + file listing hot)
   * and writes `<outDir>/<key>.txt` with the `explain("formatted")` output so
   * plan claims (Exchange count, join strategy, PushedFilters) are on record.
@@ -43,8 +45,12 @@ object Profile {
         val t1b = System.nanoTime()
         val planned = df.queryExecution.executedPlan // force planning
         val t2 = System.nanoTime()
-        if (!planOnly) df.write.format("noop").mode("overwrite").save()
+        val execGroup = s"profile-exec:$k"
+        sc.setJobGroup(execGroup, s"profile:$k", interruptOnCancel = false)
+        try if (!planOnly) df.write.format("noop").mode("overwrite").save()
+        finally sc.clearJobGroup()
         val t3 = System.nanoTime()
+        sc.setJobDescription(s"profile:$k")
         if (!planOnly) df.write.format("noop").mode("overwrite").save()
         val t4 = System.nanoTime()
         // formatted explain AFTER execution: with AQE the executedPlan
@@ -56,10 +62,12 @@ object Profile {
           java.nio.file.Paths.get(outDir, s"$k.txt"),
           txt.getBytes("UTF-8"))
         val nEx = "Exchange".r.findAllIn(txt).size
+        org.apache.spark.GraftBus.drain(sc)
+        val execJobs = sc.statusTracker.getJobIdsForGroup(execGroup).length
         def s(a: Long, b: Long) = math.round((b - a) / 1e6) / 1e3
         println(s"""PROFILE {"key":"$k","build_s":${s(t0, t1)},""" +
           s""""build_jobs":$buildJobs,"plan_s":${s(t1b, t2)},"exec1_s":${s(t2, t3)},""" +
-          s""""exec2_s":${s(t3, t4)},"exchanges":$nEx,""" +
+          s""""exec_jobs":$execJobs,"exec2_s":${s(t3, t4)},"exchanges":$nEx,""" +
           s""""nodes":${planned.collectLeaves().size}}""")
       }
     }

@@ -52,6 +52,7 @@ object Tables {
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
     if (name == "documents") {
       // The corpus table is where every consumer does heavy PER-ROW work
       // (normalization regex, shingle/token explode, md5 fingerprints) —
@@ -59,7 +60,7 @@ object Tables {
       // which caps the whole map side of every text/dedup key at one core
       // no matter the session's parallelism (measured: the raw shingle
       // explode alone was 2.7 s single-threaded at sf0.1).
-      widen(spark, parquet(spark, dir, name), "doc_id")
+      widen(spark, parquet(spark, path), "doc_id")
     } else if (name == "events") {
       // events.ts has shipped under two physical schemas: nanosecond int64
       // (which Spark 4 only reads with nanosAsLong) and timestamp[us] with
@@ -71,7 +72,7 @@ object Tables {
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       // set before the read: the footer decode follows the session's value
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = parquet(spark, dir, name)
+      val raw = parquet(spark, path)
       raw.schema("ts").dataType match {
         case LongType =>
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000L")))
@@ -81,19 +82,17 @@ object Tables {
           raw
       }
     } else {
-      parquet(spark, dir, name)
+      parquet(spark, path)
     }
   }
 
-  /** `spark.read.parquet` of one table, with its schema decoded from the
-    * file's footer on the driver ([[graft.pipeline.LandingRead.footerRead]])
-    * instead of in Spark's schema-inference job; Spark's reader where that
-    * read declines. */
-  private def parquet(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
+  /** `spark.read.parquet(path)`, with its schema decoded from a footer on
+    * the driver ([[graft.pipeline.LandingRead.footerRead]]) instead of in
+    * Spark's schema-inference job; Spark's reader where that read
+    * declines. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
     graft.pipeline.LandingRead.footerRead(spark, Map.empty, Seq(path))
       .getOrElse(spark.read.parquet(path))
-  }
 }
 
 /** Scratch directories under `java.io.tmpdir`, each deleted recursively

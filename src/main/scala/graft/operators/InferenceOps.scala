@@ -606,7 +606,7 @@ object InferenceOps {
                CAST(SUM(x1 * x3) AS BIGINT) AS s13,
                CAST(SUM(x2 * x3) AS BIGINT) AS s23
         FROM b""")
-        .matCkpt(s, d).createOrReplaceTempView("m_cv")
+        .trackedCkpt().createOrReplaceTempView("m_cv")
       s.sql("""
         WITH m AS (SELECT * FROM m_cv),
              l AS (SELECT 'quantity' AS vi, 'quantity' AS vj,
@@ -957,13 +957,10 @@ object InferenceOps {
     "text_bigram_lm_score",
     (s, d) => {
       t(s, d, "documents").createOrReplaceTempView("documents_bl")
-      // materialize the tokenize→explode bigram relation once: Spark
-      // inlines CTEs, so bg0 (referenced via voc twice and bg three
-      // times) re-ran the whole tokenize pipeline 8× in the r18
-      // before-plan (8 scans of documents). One cached pass is the
-      // materialize-once discipline of guide §8; voc (≤500 rows) is
-      // cached too so its window aggregate runs once, not once per
-      // downstream reference.
+      // the tokenize→explode bigram relation (bg0, referenced via voc
+      // twice and bg three times) and the ≤500-row vocab stay plain
+      // views, which Spark inlines at each reference: checkpointing
+      // both measured no faster at sf1 (MATS.md).
       s.sql("""
         WITH tk AS (SELECT doc_id, source,
                            split(trim(regexp_replace(lower(text),
@@ -974,14 +971,14 @@ object InferenceOps {
         FROM tk
         LATERAL VIEW explode(sequence(1, size(w) - 1)) t AS i
         WHERE size(w) >= 2""")
-        .matCkpt(s, d).createOrReplaceTempView("bg0_bl")
+        .createOrReplaceTempView("bg0_bl")
       s.sql("""
         SELECT w1 AS w FROM (
           SELECT w1, COUNT(*) AS c,
                  ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, w1) AS rn
           FROM bg0_bl GROUP BY w1 HAVING COUNT(*) >= 5) v
         WHERE rn <= 500""")
-        .matCkpt(s, d).createOrReplaceTempView("voc_bl")
+        .createOrReplaceTempView("voc_bl")
       s.sql("""
         WITH bg0 AS (SELECT doc_id, source, w1, w2 FROM bg0_bl),
              voc AS (SELECT w FROM voc_bl),
@@ -1770,9 +1767,7 @@ object InferenceOps {
       // the edge list IS the shared supply-graph relation (identical
       // algebra: sparsified undirected nation pairs, both directions) —
       // ride GraphOps' session-pinned cross-key cache instead of
-      // re-deriving the 4-table fact join here (r19; the r18 spelling
-      // re-ran that join 4× per invocation, then a matCkpt skipped at
-      // test scale still re-ran it twice)
+      // re-deriving the 4-table fact join here
       GraphOps.supplyEdges(s, d).createOrReplaceTempView("ed_md")
       s.sql("""
         WITH ed AS (SELECT src, dst FROM ed_md),
@@ -1859,7 +1854,7 @@ object InferenceOps {
                       CAST(SUM(CAST(round(value * 100) AS BIGINT))
                            AS BIGINT) AS sx
                FROM events_jk GROUP BY 1""")
-        .matCkpt(s, d).createOrReplaceTempView("g_jk")
+        .trackedCkpt().createOrReplaceTempView("g_jk")
       s.sql("""
         WITH tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS gg,
                             CAST(SUM(n) AS BIGINT) AS nn,
@@ -1868,7 +1863,7 @@ object InferenceOps {
                (CAST(tot.ss - g.sx AS DOUBLE)) / (tot.nn - g.n) AS theta_i,
                tot.gg, tot.nn, tot.ss
         FROM g_jk g CROSS JOIN tot""")
-        .matCkpt(s, d).createOrReplaceTempView("lo_jk")
+        .trackedCkpt().createOrReplaceTempView("lo_jk")
       s.sql("""
         WITH lo AS (SELECT day, theta_i, gg, nn, ss FROM lo_jk),
              mj AS (SELECT MAX(gg) AS gg,
@@ -2787,7 +2782,7 @@ object InferenceOps {
                       CAST(round(l_quantity) AS BIGINT) AS v,
                       CAST(COUNT(*) AS BIGINT) AS c
                FROM lineitem_kw GROUP BY 1, 2""")
-        .matCkpt(s, d).createOrReplaceTempView("gv_kw")
+        .trackedCkpt().createOrReplaceTempView("gv_kw")
       s.sql("""
         WITH gv AS (SELECT g, v, c FROM gv_kw),
              dv AS (SELECT v, CAST(SUM(c) AS BIGINT) AS tc

@@ -3209,7 +3209,7 @@ object LlmOps {
                      FROM hm GROUP BY doc_id)
         SELECT doc_id, array(h0, h1, h2, h3, h4, h5, h6, h7) AS sig
         FROM sig""")
-        .matCkpt(s, d).createOrReplaceTempView("arr_mh")
+        .trackedCkpt().createOrReplaceTempView("arr_mh")
       s.sql("""
         WITH arr AS (SELECT doc_id, sig FROM arr_mh),
              bands AS (SELECT doc_id, b,
@@ -3666,7 +3666,7 @@ object LlmOps {
                      FROM th CROSS JOIN fw GROUP BY th.pct)
         SELECT pk.pct, pk.cut, pk.toks, pvv.vocab
         FROM pk JOIN pvv ON pk.pct = pvv.pct""")
-        .matCkpt(s, d).createOrReplaceTempView("pt_hp")
+        .trackedCkpt().createOrReplaceTempView("pt_hp")
       s.sql("""
         WITH pt AS (SELECT pct, cut, toks, vocab FROM pt_hp),
              ols AS (SELECT CAST(COUNT(*) AS BIGINT) AS k,

@@ -1035,16 +1035,15 @@ object MiningOps {
     "agg_abc_class",
     (s, d) => {
       t(s, d, "lineitem").createOrReplaceTempView("lineitem_abc")
-      // materialize the per-part revenue once (guide §2.4): rev feeds
-      // tot, the bucketed cumsum AND the bucket totals — the CTE
-      // spelling re-scanned lineitem 3× in the r18 before-plan. The
-      // cache is part-bounded, never fact-bounded.
+      // per-part revenue: rev feeds tot, the bucketed cumsum AND the
+      // bucket totals. Left a plain view, which Spark inlines at each
+      // reference: a cache measured slower at sf1 (MATS.md).
       s.sql("""
         SELECT l_partkey AS pk,
                CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
                     AS BIGINT) AS r
         FROM lineitem_abc GROUP BY 1""")
-        .matCache(s, d).createOrReplaceTempView("rev_abc")
+        .createOrReplaceTempView("rev_abc")
       s.sql("""
         WITH rev AS (SELECT pk, r FROM rev_abc),
              tot AS (SELECT CAST(SUM(r) AS BIGINT) AS t FROM rev),
@@ -1957,7 +1956,7 @@ object MiningOps {
                       MIN(unix_timestamp(ts) div 604800) AS fw,
                       MAX(unix_timestamp(ts) div 604800) AS lw
                FROM events_ch GROUP BY 1""")
-        .matCkpt(s, d).createOrReplaceTempView("w_ch")
+        .trackedCkpt().createOrReplaceTempView("w_ch")
       s.sql("""
         WITH gm AS (SELECT MAX(lw) AS gw FROM w_ch),
              u AS (SELECT CAST(lw - fw AS BIGINT) AS off,
@@ -1966,7 +1965,7 @@ object MiningOps {
         SELECT off, CAST(SUM(1 - cens) AS BIGINT) AS ended,
                CAST(SUM(cens) AS BIGINT) AS censored
         FROM u GROUP BY 1""")
-        .matCkpt(s, d).createOrReplaceTempView("dc_ch")
+        .trackedCkpt().createOrReplaceTempView("dc_ch")
       s.sql("""
         WITH dc AS (SELECT off, ended, censored FROM dc_ch),
              tot AS (SELECT CAST(SUM(ended + censored) AS BIGINT) AS n

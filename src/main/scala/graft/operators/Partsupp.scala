@@ -76,7 +76,7 @@ object Partsupp {
         .write.mode("overwrite").parquet(s"$dir/data")
       Versioned.commit(r, dir, conf, keepVersions = 2)
     }
-    s.read.parquet(Versioned.current(r, conf).get.toString + "/data")
+    Tables.parquet(s, Versioned.current(r, conf).get.toString + "/data")
   }
 
   /** The same derivation as a DuckDB CTE body (splice as

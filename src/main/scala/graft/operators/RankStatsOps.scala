@@ -225,7 +225,7 @@ object RankStatsOps {
                           CAST(round(value * 100) AS BIGINT) AS x
                    FROM events_jt)
         SELECT g, x, CAST(COUNT(*) AS BIGINT) AS c FROM b GROUP BY g, x""")
-        .matCkpt(s, d).createOrReplaceTempView("vc_jt")
+        .trackedCkpt().createOrReplaceTempView("vc_jt")
       s.sql("""
         WITH vc AS (SELECT g, x, c FROM vc_jt),
              dv AS (SELECT DISTINCT x FROM vc),
@@ -238,7 +238,7 @@ object RankStatsOps {
                     AS BIGINT) AS cumle
         FROM dv CROSS JOIN gs
         LEFT JOIN vc ON vc.g = gs.g AND vc.x = dv.x""")
-        .matCkpt(s, d).createOrReplaceTempView("grid_jt")
+        .trackedCkpt().createOrReplaceTempView("grid_jt")
       s.sql("""
         WITH vc AS (SELECT g, x, c FROM vc_jt),
              gs AS (SELECT g, CAST(SUM(c) AS BIGINT) AS ng
@@ -1104,14 +1104,14 @@ object RankStatsOps {
     "agg_theil_u",
     (s, d) => {
       onLineitem(s, d, "lineitem_tu")
-      // materialize the domain-collapsed joint counts once (guide §2.4):
-      // g feeds nn and all three entropy CTEs — the inline spelling
-      // re-scanned lineitem 6x in the r18 before-plan.
+      // the domain-collapsed joint counts: g feeds nn and all three
+      // entropy CTEs. Left a plain view, which Spark inlines at each
+      // reference: a checkpoint measured slower at sf1 (MATS.md).
       s.sql("""SELECT CAST(round(l_quantity) AS BIGINT) AS x,
                       CAST(round(l_discount * 10000) AS BIGINT) AS y,
                       CAST(COUNT(*) AS BIGINT) AS c
                FROM lineitem_tu GROUP BY 1, 2""")
-        .matCkpt(s, d).createOrReplaceTempView("g_tu")
+        .createOrReplaceTempView("g_tu")
       s.sql("""
         WITH g AS (SELECT x, y, c FROM g_tu),
              nn AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM g),
@@ -1372,7 +1372,7 @@ object RankStatsOps {
                       CAST(SUM(CAST(round(value * 100) AS BIGINT))
                            AS BIGINT) AS x
                FROM events_kw GROUP BY user_id, event_type""")
-        .matCkpt(s, d).createOrReplaceTempView("pt_kw")
+        .trackedCkpt().createOrReplaceTempView("pt_kw")
       s.sql("""
         WITH kk AS (SELECT CAST(COUNT(DISTINCT g) AS BIGINT) AS k
                     FROM pt_kw),
@@ -1387,7 +1387,7 @@ object RankStatsOps {
                CAST(COUNT(*) OVER (PARTITION BY p.user_id,
                      p.x) AS BIGINT) AS tsz
         FROM pt_kw p JOIN cb ON p.user_id = cb.user_id""")
-        .matCkpt(s, d).createOrReplaceTempView("jr_kw")
+        .trackedCkpt().createOrReplaceTempView("jr_kw")
       s.sql("""
         WITH kk AS (SELECT CAST(COUNT(DISTINCT g) AS BIGINT) AS k
                     FROM pt_kw),
@@ -1720,15 +1720,14 @@ object RankStatsOps {
     "agg_ljung_box",
     (s, d) => {
       onEvents(s, d, "events_lb")
-      // materialize the ~730-row day relation once: Spark INLINES CTEs,
-      // so without the cache the events scan+aggregate re-runs for every
-      // dy reference (st, y, and the 10-lag join) — 3× the fact scan at
-      // any scale for a relation that fits in one page
+      // the ~730-row day relation feeds every dy reference (st, y, and
+      // the 10-lag join). Left a plain view, which Spark inlines at each
+      // reference: a cache measured no faster at sf1 (MATS.md).
       s.sql("""SELECT unix_timestamp(ts) div 86400 AS day_idx,
                       CAST(SUM(CAST(round(value * 100) AS BIGINT))
                            AS BIGINT) AS x
                FROM events_lb GROUP BY 1""")
-        .matCache(s, d).createOrReplaceTempView("lb_dy")
+        .createOrReplaceTempView("lb_dy")
       s.sql("""
         WITH dy AS (SELECT day_idx, x FROM lb_dy),
              st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,

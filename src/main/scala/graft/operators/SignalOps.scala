@@ -1066,7 +1066,7 @@ object SignalOps {
         .groupBy(col("o_orderstatus").as("st"),
           col("o_orderpriority").as("pr"))
         .agg(count(lit(1)).as("n"))
-        .matCkpt(s, d)
+        .trackedCkpt()
         .createOrReplaceTempView("ipf_cells")
       s.sql("""
         WITH c AS (SELECT st, pr, n FROM ipf_cells),
@@ -2367,9 +2367,9 @@ object SignalOps {
     "agg_gage_rr",
     (s, d) => {
       t(s, d, "lineitem").createOrReplaceTempView("lineitem_grr")
-      // materialize the 15-row cell table once (guide §2.4): cell feeds
-      // tot, the per-operator and the per-part moment CTEs — the inline
-      // spelling re-ran the fact window 3× in the r18 before-plan.
+      // the 15-row cell table feeds tot, the per-operator and the
+      // per-part moment CTEs. Left a plain view, which Spark inlines at
+      // each reference: a checkpoint measured slower at sf1 (MATS.md).
       s.sql("""
         WITH b AS (SELECT CAST(l_suppkey % 3 AS INT) AS op,
                           CAST(l_partkey % 5 AS INT) AS pt,
@@ -2385,7 +2385,7 @@ object SignalOps {
                CAST(SUM(x * x) AS BIGINT) AS sxx,
                CAST(COUNT(*) AS BIGINT) AS n
         FROM k GROUP BY op, pt""")
-        .matCkpt(s, d).createOrReplaceTempView("cell_grr")
+        .createOrReplaceTempView("cell_grr")
       s.sql("""
         WITH cell AS (SELECT op, pt, t, sxx, n FROM cell_grr),
              tot AS (SELECT CAST(SUM(t) AS BIGINT) AS tt,

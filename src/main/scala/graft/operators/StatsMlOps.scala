@@ -102,7 +102,7 @@ object StatsMlOps {
       s.sql("""SELECT l_returnflag AS g, l_quantity AS x,
                       l_extendedprice AS y, CAST(COUNT(*) AS BIGINT) AS c
                FROM lineitem_sp GROUP BY 1, 2, 3""")
-        .matCache(s, d).createOrReplaceTempView("joint_sp")
+        .trackedCache().createOrReplaceTempView("joint_sp")
       s.sql("""
         WITH joint AS (SELECT g, x, y, c FROM joint_sp),
              xs AS (SELECT g, x, CAST(SUM(c) AS BIGINT) AS cx
@@ -560,7 +560,7 @@ object StatsMlOps {
                       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
                            AS BIGINT) AS rev
                FROM orders_lz GROUP BY 1""")
-        .matCkpt(s, d).createOrReplaceTempView("r_lz")
+        .trackedCkpt().createOrReplaceTempView("r_lz")
       s.sql("""
         WITH bkt AS (SELECT o_custkey, rev, rev div 10000000 AS bu
                      FROM r_lz),

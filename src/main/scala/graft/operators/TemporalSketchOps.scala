@@ -1457,7 +1457,7 @@ object TemporalSketchOps {
       s.sql("""SELECT DISTINCT event_type, user_id,
                       CAST(EXTRACT(DAY FROM ts) AS BIGINT) AS dd
                FROM events_kd""")
-        .matCache(s, d).createOrReplaceTempView("el_kd")
+        .trackedCache().createOrReplaceTempView("el_kd")
       s.sql("""
         WITH h AS (SELECT event_type,
                           CAST(conv(substring(md5(concat(
@@ -1470,7 +1470,7 @@ object TemporalSketchOps {
                      row_number() OVER (PARTITION BY event_type
                                         ORDER BY hv) AS rn
               FROM h) r WHERE rn <= 64""")
-        .matCache(s, d).createOrReplaceTempView("topk_kd")
+        .trackedCache().createOrReplaceTempView("topk_kd")
       s.sql("""
         WITH el AS (SELECT event_type, user_id, dd FROM el_kd),
              topk AS (SELECT event_type, hv FROM topk_kd),

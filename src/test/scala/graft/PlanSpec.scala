@@ -982,4 +982,58 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("privacy_tcloseness")
     assert("Scan parquet".r.findAllIn(p).length <= 2, p.take(1200))
   }
+
+  /** Stages that read a parquet file while `key` is built and written once
+    * to the noop sink, and the key's optimized plan. A relation that is
+    * materialized once is scanned in one stage, however many references
+    * read it. */
+  private def scanStagesOf(key: String) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
+    val sc = spark.sparkContext
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.add(e.stageInfo)
+    }
+    // a build of the same key earlier in the suite can leave its cache
+    // filled, and a filled cache is read with no scan: start from none
+    Mats.release()
+    org.apache.spark.GraftBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val df = SparkEntry.queries(key)(spark, sfDir)
+      df.write.format("noop").mode("overwrite").save()
+      org.apache.spark.GraftBus.drain(sc)
+      val scans = stages.toArray(Array.empty[StageInfo])
+        .count(_.rddInfos.exists(_.name == "FileScanRDD"))
+      (scans, df.queryExecution.optimizedPlan)
+    } finally { sc.removeSparkListener(listener); Mats.release() }
+  }
+
+  // the keys whose multiply-referenced intermediate is materialized (a
+  // checkpoint or a cache, per MATS.md): each reads the materialized
+  // relation, and its one input table is scanned only by the relation's
+  // own plan, at every scale. text_heaps_fit's prefix table reads
+  // documents in two scan stages of its own (three references: the word
+  // explode, the per-doc token counts and the max doc id).
+  for ((key, cached, scanStages) <- Seq(
+      ("agg_cov_matrix", false, 1), ("agg_jackknife", false, 1),
+      ("agg_jonckheere", false, 1), ("agg_kendall_w", false, 1),
+      ("agg_kmv_difference", true, 1), ("agg_kruskal_wallis", false, 1),
+      ("agg_lorenz", false, 1),
+      ("agg_raking_ipf", false, 1), ("agg_spearman", true, 1),
+      ("dedup_minhash_md5", false, 1), ("event_churn_hazard", false, 1),
+      ("text_heaps_fit", false, 2))) {
+    test(s"$key reads its materialized relation and scans its input once") {
+      import org.apache.spark.sql.execution.LogicalRDD
+      import org.apache.spark.sql.execution.columnar.InMemoryRelation
+      val (scans, lp) = scanStagesOf(key)
+      val mats = lp.collectWithSubqueries {
+        case r: LogicalRDD if !cached => r
+        case r: InMemoryRelation if cached => r
+      }
+      assert(mats.nonEmpty, lp.treeString.take(1200))
+      assert(scans === scanStages, lp.treeString.take(1200))
+    }
+  }
 }

@@ -83,6 +83,13 @@ class TablesSpec extends AnyFunSuite {
     assert(footer.queryExecution.toRdd.getNumPartitions === splits)
   }
 
+  test("the partsupp-bearing TPC-H queries build with no Spark job once partsupp is staged") {
+    operators.Partsupp.table(spark, sfDir)
+    for (k <- Seq("sql_tpch_q2", "sql_tpch_q9", "sql_tpch_q11", "sql_tpch_q16",
+                  "sql_tpch_q20"))
+      assert(jobsOf(SparkEntry.queries(k)(spark, sfDir)) === 0, k)
+  }
+
   for (dir <- sfDirs; name <- Tables.names) {
     test(s"$name post-load schema at ${dir.split('/').last}") {
       val schema = Tables.load(spark, dir, name).schema
