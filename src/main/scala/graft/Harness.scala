@@ -28,6 +28,7 @@ object Harness {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    CodegenCache.size(spark)
     spark.sparkContext.setLogLevel(logLevel)
     spark
   }

@@ -16,6 +16,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * `CosineSimilarity.register` remains for per-session registration when the
   * builder is not under the caller's control (the operator registry uses it).
+  *
+  * When a session's state is built, the extension also sizes Spark's
+  * generated-class cache to `graft.CodegenCache.Entries` entries, so warm
+  * passes over many keys reuse their compiled classes instead of evicting
+  * and recompiling them. A `spark.sql.codegen.cache.maxEntries` set in the
+  * SparkConf wins. The cache is sized once per JVM, so only the first
+  * session to generate code in a JVM can size it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -65,6 +72,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
     // curated-dimension auto-broadcast (graft.plans.BroadcastDimensionsRule)
     ext.injectOptimizerRule(_ => graft.plans.BroadcastDimensionsRule())
+    // Spark builds the parser with the session's state, before the session
+    // can generate code; the parent parser is returned unchanged
+    ext.injectParser { (session, parser) => graft.CodegenCache.size(session); parser }
   }
 }
 

@@ -16,6 +16,7 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .appName("graft-test")
       .getOrCreate()
+    CodegenCache.size(s)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

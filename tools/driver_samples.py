@@ -15,9 +15,15 @@ runs the workload, and prints:
   - the share of samples per bucket, the first that matches anywhere in the
     stack: schema inference (Spark's, or the driver-side footer read), stream
     drain (`awaitTermination`), forked shell (a child process, e.g. Hadoop's
-    `Shell.runCommand`), job wait, catalog, analysis, other;
+    `Shell.runCommand`), codegen (Janino compiling a generated class), job
+    wait, catalog, analysis, other;
   - the share of samples per innermost `graft.` frame (method, no line);
-  - the share of samples per pair of the two.
+  - the share of samples per pair of the two;
+  - the CPU seconds the JVM's threads used over the sampled window, from
+    `/proc/<pid>/task/*/stat`, grouped by thread name: the JIT's C2 and C1
+    compiler threads, Spark's executor task threads, `main` and the rest.
+    The times are read every 0.5 s, so a thread that exits inside the
+    window counts up to its last read.
 
 Warm passes are told apart on disk: for `ingest`, the pass directory
 `ingest/p<index>` with index 2 or more exists (0 is the cold pass, 1 the
@@ -40,6 +46,16 @@ ROOT = Path(__file__).resolve().parent.parent
 MAX_INFLIGHT = 2
 INTERVAL_S = 0.05  # between dump requests; jstack's own latency bounds the rate
 TOP = 15  # rows per table
+CPU_INTERVAL_S = 0.5  # between reads of the JVM's per-thread CPU times
+CLK_TCK = os.sysconf("SC_CLK_TCK")
+# (group, thread names); /proc cuts a name at 15 characters, and the JVM's
+# main thread keeps the launcher's name, java
+THREAD_GROUPS = [
+    ("C2 CompilerThre", ("C2 CompilerThre",)),
+    ("C1 CompilerThre", ("C1 CompilerThre",)),
+    ("Executor task l", ("Executor task l",)),
+    ("main", ("java",)),
+]
 
 # (bucket, frame substrings); a sample goes to the first bucket with a match
 BUCKETS = [
@@ -47,6 +63,7 @@ BUCKETS = [
                           "LandingRead$.footerRead")),
     ("stream drain", (".awaitTermination(",)),
     ("forked shell", ("Shell.runCommand", "ProcessImpl.", "ProcessBuilder.start")),
+    ("codegen", ("CodeGenerator$.doCompile", "org.codehaus.janino.")),
     # adaptive execution waits for its query stages on a queue
     ("job wait", ("DAGScheduler.runJob", "JobWaiter.", "LinkedBlockingQueue.take")),
     ("catalog", ("SessionCatalog.", "ExternalCatalog", "InMemoryCatalog.")),
@@ -114,6 +131,32 @@ def innermost_graft(frames):
     return "(no graft. frame)"
 
 
+def thread_cpu(pid):
+    """{tid: (thread name, CPU seconds)} for the threads of `pid`."""
+    out = {}
+    try:
+        tasks = list(Path(f"/proc/{pid}/task").iterdir())
+    except OSError:
+        return out
+    for t in tasks:
+        try:
+            stat = (t / "stat").read_text()
+        except OSError:
+            continue
+        name = stat[stat.index("(") + 1:stat.rindex(")")]
+        fields = stat.rsplit(")", 1)[1].split()
+        # utime and stime, fields 14 and 15 of stat(5)
+        out[int(t.name)] = (name, (int(fields[11]) + int(fields[12])) / CLK_TCK)
+    return out
+
+
+def thread_group(name):
+    for group, names in THREAD_GROUPS:
+        if name in names:
+            return group
+    return "other"
+
+
 def main_stack(pid):
     """The `main` thread's frames from one `jstack` of `pid`."""
     try:
@@ -125,9 +168,11 @@ def main_stack(pid):
 
 
 def sample(bench):
-    """Main-thread stacks of the benchmark JVM during its warm passes, and
-    the seconds from the first sample to the last."""
+    """Main-thread stacks of the benchmark JVM during its warm passes, the
+    seconds from the first sample to the last, and the CPU seconds per
+    thread group over that window."""
     dumps, pid, args, t0 = [], None, None, None
+    cpu0, cpu1, t_cpu = {}, {}, 0.0
     with concurrent.futures.ThreadPoolExecutor(MAX_INFLIGHT) as pool:
         while bench.poll() is None:
             if pid is None or not os.path.exists(f"/proc/{pid}"):
@@ -138,13 +183,25 @@ def sample(bench):
                     if args:
                         pid = c
                         break
+                if pid:
+                    cpu0, cpu1 = {}, {}
             if (pid and sum(not d.done() for d in dumps) < MAX_INFLIGHT
                     and warm(args)):
                 t0 = t0 or time.time()
                 dumps.append(pool.submit(main_stack, pid))
+            if t0 and pid and time.time() - t_cpu >= CPU_INTERVAL_S:
+                t_cpu = time.time()
+                now = thread_cpu(pid)
+                if not cpu0:
+                    cpu0 = now
+                else:
+                    cpu1.update(now)
             time.sleep(INTERVAL_S)
     span = time.time() - t0 if t0 else 0.0
-    return [d.result() for d in dumps if d.result()], span
+    cpu = collections.Counter()
+    for tid, (name, secs) in cpu1.items():
+        cpu[thread_group(name)] += secs - cpu0.get(tid, (name, 0.0))[1]
+    return [d.result() for d in dumps if d.result()], span, cpu
 
 
 def table(title, counts, total):
@@ -165,7 +222,7 @@ def main():
     with tempfile.TemporaryFile("w+") as out:
         bench = subprocess.Popen(cmd, cwd=ROOT, stdout=out)
         try:
-            stacks, span = sample(bench)
+            stacks, span, cpu = sample(bench)
         finally:
             if bench.poll() is None:
                 bench.terminate()
@@ -186,6 +243,9 @@ def main():
     table("bucket, innermost graft. frame",
           collections.Counter(f"{bucket(s)}: {innermost_graft(s)}" for s in stacks),
           len(stacks))
+    print("\nCPU seconds of the JVM's threads over the window")
+    for group, secs in cpu.most_common():
+        print(f"  {secs:7.1f}  {group}")
 
 
 if __name__ == "__main__":
