@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -77,14 +76,4 @@ object BlockMeanHash {
     }
     hash
   }
-
-  /** Register as a SQL function (same pattern as CosineSimilarity.register). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_block_mean_hash",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "graft_block_mean_hash(payload) takes one binary")
-        BlockMeanHash(exprs.head)
-      },
-      "built-in")
 }

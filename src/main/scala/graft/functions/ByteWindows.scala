@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -79,17 +78,4 @@ object ByteWindows {
     }
     new GenericArrayData(rows)
   }
-
-  /** Register as a SQL function (same pattern as TextWinnow.register);
-    * width and stride must be integer literals. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_byte_windows",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3,
-          "graft_byte_windows(payload, width, stride) takes three arguments")
-        ByteWindows(exprs.head, GraftExtensions.litInt(exprs(1), "width"),
-          GraftExtensions.litInt(exprs(2), "stride"))
-      },
-      "built-in")
 }

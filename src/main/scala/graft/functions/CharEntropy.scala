@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -93,14 +92,4 @@ object CharEntropy {
     }
     math.log(n.toDouble) / Ln2 - acc / n
   }
-
-  /** Register as a SQL function (same pattern as CosineSimilarity.register). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_entropy",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "graft_char_entropy(text) takes one string")
-        CharEntropy(exprs.head)
-      },
-      "built-in")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -14,8 +14,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark.sql("SELECT graft_cosine(a, b) FROM t")
   * }}}
   *
-  * `CosineSimilarity.register` remains for per-session registration when the
-  * builder is not under the caller's control (the operator registry uses it).
+  * `GraftExtensions.register` adds the same functions (`functions`) to a
+  * live session when the builder is not under the caller's control (the
+  * operator registry uses it).
   *
   * When a session's state is built, the extension also sizes Spark's
   * generated-class cache to `graft.CodegenCache.Entries` entries, so warm
@@ -26,50 +27,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "graft_cosine(a, b) takes two arrays")
-        CosineSimilarity(exprs.head, exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[TextWinnow].getName, "graft_winnow"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "graft_winnow(text) takes one string")
-        TextWinnow(exprs.head)
-      }))
-    import GraftExtensions.litInt
-    ext.injectFunction((
-      FunctionIdentifier("graft_block_mean_hash"),
-      new ExpressionInfo(classOf[BlockMeanHash].getName, "graft_block_mean_hash"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "graft_block_mean_hash(payload) takes one binary")
-        BlockMeanHash(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_char_entropy"),
-      new ExpressionInfo(classOf[CharEntropy].getName, "graft_char_entropy"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "graft_char_entropy(text) takes one string")
-        CharEntropy(exprs.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShingleSet].getName, "graft_shingles"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "graft_shingles(norm_text, k) takes two arguments")
-        ShingleSet(exprs.head, litInt(exprs(1), "shingle width"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_byte_windows"),
-      new ExpressionInfo(classOf[ByteWindows].getName, "graft_byte_windows"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3,
-          "graft_byte_windows(payload, width, stride) takes three arguments")
-        ByteWindows(exprs.head, litInt(exprs(1), "width"), litInt(exprs(2), "stride"))
-      }))
+    GraftExtensions.functions.foreach(ext.injectFunction)
     // curated-dimension auto-broadcast (graft.plans.BroadcastDimensionsRule)
     ext.injectOptimizerRule(_ => graft.plans.BroadcastDimensionsRule())
     // Spark builds the parser with the session's state, before the session
@@ -79,10 +37,49 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Foldable-literal int parameter extraction, shared by the extension
-    * injector and the per-session `register` paths of the parameterized
+  private type Builder = Seq[Expression] => Expression
+
+  /** One native SQL function: its name, the expression class that
+    * documents it, its arity with the message a wrong one throws, and the
+    * builder over exactly that many arguments. */
+  private def native(name: String, cls: Class[_], arity: Int, usage: String)(
+      build: Builder): (FunctionIdentifier, ExpressionInfo, Builder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      { exprs => require(exprs.length == arity, usage); build(exprs) })
+
+  /** The native-function catalog. The extension injects it and `register`
+    * adds it to a live session, so both paths expose the same names. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
+    native("graft_cosine", classOf[CosineSimilarity], 2,
+      "graft_cosine(a, b) takes two arrays")(e => CosineSimilarity(e(0), e(1))),
+    native("graft_winnow", classOf[TextWinnow], 1,
+      "graft_winnow(text) takes one string")(e => TextWinnow(e(0))),
+    native("graft_md5_winnow", classOf[Md5Winnow], 1,
+      "graft_md5_winnow(text) takes one string")(e => Md5Winnow(e(0))),
+    native("graft_block_mean_hash", classOf[BlockMeanHash], 1,
+      "graft_block_mean_hash(payload) takes one binary")(e => BlockMeanHash(e(0))),
+    native("graft_char_entropy", classOf[CharEntropy], 1,
+      "graft_char_entropy(text) takes one string")(e => CharEntropy(e(0))),
+    native("graft_shingles", classOf[ShingleSet], 2,
+      "graft_shingles(norm_text, k) takes two arguments")(
+      e => ShingleSet(e(0), litInt(e(1), "shingle width"))),
+    native("graft_byte_windows", classOf[ByteWindows], 3,
+      "graft_byte_windows(payload, width, stride) takes three arguments")(
+      e => ByteWindows(e(0), litInt(e(1), "width"), litInt(e(2), "stride"))),
+    native("graft_morton", classOf[MortonCode], 2,
+      "graft_morton(a, b) takes two bigints")(e => MortonCode(e(0), e(1))))
+
+  /** Registers the catalog in `spark`'s session, for sessions whose
+    * builder is not under the caller's control (the operator registry
+    * calls it once per build). Re-registering puts the same entries. */
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
+
+  /** Foldable-literal int parameter extraction for the parameterized
     * native expressions. */
-  private[functions] def litInt(e: Expression, what: String): Int = {
+  private def litInt(e: Expression, what: String): Int = {
     require(e.foldable, s"$what must be a literal")
     e.eval().asInstanceOf[Number].intValue()
   }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -103,14 +102,4 @@ object Md5Winnow {
     }
     new GenericInternalRow(Array[Any](seen.size, fpMin, fpMax))
   }
-
-  /** Register as a SQL function (same pattern as TextWinnow.register). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5_winnow",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "graft_md5_winnow(text) takes one string")
-        Md5Winnow(exprs.head)
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -65,14 +64,4 @@ object MortonCode {
   /** 2-D Morton code: a's bits at even positions, b's at odd. */
   def interleave(a: Long, b: Long): Long =
     spread(a) | (spread(b) << 1)
-
-  /** Register as a SQL function (same pattern as CharEntropy.register). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_morton",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "graft_morton(a, b) takes two bigints")
-        MortonCode(exprs.head, exprs(1))
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -82,15 +81,4 @@ object ShingleSet {
     }
     new GenericArrayData(seen.toArray(new Array[AnyRef](seen.size())))
   }
-
-  /** Register as a SQL function (same pattern as TextWinnow.register);
-    * the shingle width must be an integer literal. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "graft_shingles(norm_text, k) takes two arguments")
-        ShingleSet(exprs.head, GraftExtensions.litInt(exprs(1), "shingle width"))
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
@@ -97,14 +96,4 @@ object TextWinnow {
     }
     new GenericInternalRow(Array[Any](seen.size, fpMin, fpMax))
   }
-
-  /** Register as a SQL function (same pattern as CosineSimilarity.register). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow",
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "graft_winnow(text) takes one string")
-        TextWinnow(exprs.head)
-      },
-      "built-in")
 }

@@ -1064,7 +1064,7 @@ object InferenceOps {
   private val embPrefixRecall = Op(
     "emb_prefix_recall",
     (s, d) => {
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.GraftExtensions.register(s)
       t(s, d, "embeddings").createOrReplaceTempView("embeddings_pr")
       s.sql("""
         WITH e AS (SELECT vec_id,
@@ -1199,7 +1199,7 @@ object InferenceOps {
   private val embKnnClassify = Op(
     "emb_knn_classify",
     (s, d) => {
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.GraftExtensions.register(s)
       t(s, d, "embeddings").createOrReplaceTempView("embeddings_kc")
       s.sql("""
         WITH e AS (SELECT vec_id, label,

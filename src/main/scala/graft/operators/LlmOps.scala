@@ -39,7 +39,7 @@ object LlmOps {
     * per row, zero-copy byte-slice shingles; < 3-token docs yield an empty
     * array, which explode drops — the old `size(tk) >= 3` guard). */
   private def shinglesFrom(docs: DataFrame): DataFrame = {
-    graft.functions.ShingleSet.register(docs.sparkSession)
+    graft.functions.GraftExtensions.register(docs.sparkSession)
     docs.select(col("doc_id"), explode(expr(
       "graft_shingles(trim(regexp_replace(lower(text), '\\\\s+', ' ')), 3)")).as("s"))
   }
@@ -170,7 +170,7 @@ object LlmOps {
   /** Codegen'd native cosine (graft.functions.CosineSimilarity) — same term
     * order as DuckDB's list_cosine_similarity, compiled into the join stage. */
   private def cosine(s: SparkSession): Column = {
-    graft.functions.CosineSimilarity.register(s)
+    graft.functions.GraftExtensions.register(s)
     expr("graft_cosine(va, vb)")
   }
 
@@ -964,7 +964,7 @@ object LlmOps {
   private val embHubnessAnn = Op(
     "emb_hubness_ann",
     (s, d) => {
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.GraftExtensions.register(s)
       val e = signBucketed(s, d)
       val wRoster = Window.partitionBy("bk").orderBy("vec_id")
       val roster = e
@@ -1073,7 +1073,7 @@ object LlmOps {
   private val embCosineHistogram = Op(
     "emb_cosine_histogram",
     (s, d) => {
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.GraftExtensions.register(s)
       val e = t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("va"))
       val probe = broadcast(e.where(col("vec_id") === 0).select(col("va").as("vb")))
@@ -1122,7 +1122,7 @@ object LlmOps {
   private val simTopkBatch = Op(
     "sim_topk_batch",
     (s, d) => {
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.GraftExtensions.register(s)
       val e = t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val probes = broadcast(e.where(col("vec_id") < 5)
@@ -1231,7 +1231,7 @@ object LlmOps {
   private val simAnnIvf = Op(
     "sim_ann_ivf",
     (s, d) => {
-      val cos = { graft.functions.CosineSimilarity.register(s)
+      val cos = { graft.functions.GraftExtensions.register(s)
         (a: String, b: String) => expr(s"graft_cosine($a, $b)") }
       val e = t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -1311,7 +1311,7 @@ object LlmOps {
       }
       val idx = s.read.parquet(
         s"${graft.pipeline.Versioned.current(root, conf).get.toString}/index")
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.GraftExtensions.register(s)
       val probe = broadcast(idx.where(col("vec_id") === 0)
         .select(col("v").as("vb"), col("bk").as("pbk")))
       idx.where(col("vec_id") =!= 0)
@@ -1660,7 +1660,7 @@ object LlmOps {
   private val textFingerprint = Op(
     "text_fingerprint",
     (s, d) => {
-      graft.functions.TextWinnow.register(s)
+      graft.functions.GraftExtensions.register(s)
       t(s, d, "documents")
         .where(length(col("text")) >= 11)
         .select(col("doc_id"), expr("graft_winnow(text)").as("w"))
@@ -1828,7 +1828,7 @@ object LlmOps {
   private val textRepetition = Op(
     "text_repetition",
     (s, d) => {
-      graft.functions.ShingleSet.register(s)
+      graft.functions.GraftExtensions.register(s)
       t(s, d, "documents")
         .withColumn("nt", size(tokens(col("text"))))
         .where(col("nt") >= 3)
@@ -1998,7 +1998,7 @@ object LlmOps {
   private val corpusBuild = Op(
     "corpus_build",
     (s, d) => {
-      graft.functions.ShingleSet.register(s)
+      graft.functions.GraftExtensions.register(s)
       val docs = t(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
       // quality: long enough, not repetition-collapsed
@@ -2135,7 +2135,7 @@ object LlmOps {
   private val textEntropy = Op(
     "text_entropy",
     (s, d) => {
-      graft.functions.CharEntropy.register(s)
+      graft.functions.GraftExtensions.register(s)
       t(s, d, "documents")
         .select(col("doc_id"),
           // NULL text → 0.0, matching the oracle's LEFT JOIN + coalesce
@@ -3422,7 +3422,7 @@ object LlmOps {
       // hex round-trip per gram: 6.8 s vs ~1.5 s at sf0.1 — and a naive
       // un-let-bound HOF was O(len²) md5 calls from CollapseProject
       // inlining, 185 s for 500 docs)
-      graft.functions.Md5Winnow.register(s)
+      graft.functions.GraftExtensions.register(s)
       t(s, d, "documents")
         .where(length(col("text")) >= 11)
         .select(col("doc_id"), expr("graft_md5_winnow(text)").as("w"))

@@ -624,7 +624,7 @@ object MetricsOps {
   private val embRecallAtK = Op(
     "emb_recall_at_k",
     (s, d) => {
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.GraftExtensions.register(s)
       t(s, d, "embeddings").createOrReplaceTempView("embeddings_rk")
       s.sql("""
         WITH e AS (SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v,

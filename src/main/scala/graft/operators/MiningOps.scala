@@ -199,7 +199,7 @@ object MiningOps {
   private val embTripletMining = Op(
     "emb_triplet_mining",
     (s, d) => {
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.GraftExtensions.register(s)
       t(s, d, "embeddings").createOrReplaceTempView("embeddings_tm")
       s.sql("""
         WITH e AS (SELECT vec_id, label,

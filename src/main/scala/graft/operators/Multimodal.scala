@@ -170,7 +170,7 @@ object Multimodal {
   private val mmAudioWindow = Op(
     "mm_audio_window",
     (s, d) => {
-      graft.functions.ByteWindows.register(s)
+      graft.functions.GraftExtensions.register(s)
       payloads(s, d)
         .where(octet_length(col("payload")) >= 64)
         .select(col("doc_id"),
@@ -237,7 +237,7 @@ object Multimodal {
     * tradeoff, test-asserted in MultimodalSpec. */
   private[graft] def phashPairsFrom(payloadDf: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.BlockMeanHash.register(payloadDf.sparkSession)
+    graft.functions.GraftExtensions.register(payloadDf.sparkSession)
     val h = payloadDf
       .select(col("doc_id"), expr("graft_block_mean_hash(payload)").as("ph"))
     val bands = h

@@ -367,7 +367,7 @@ object SignalOps {
   private val embHubness = Op(
     "emb_hubness",
     (s, d) => {
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.GraftExtensions.register(s)
       val e = t(s, d, "embeddings").where(col("vec_id") < 200)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val pairs = e.as("a")

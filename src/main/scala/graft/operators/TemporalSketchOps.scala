@@ -848,7 +848,7 @@ object TemporalSketchOps {
   private val layoutZorder = Op(
     "layout_zorder",
     (s, d) => {
-      graft.functions.MortonCode.register(s)
+      graft.functions.GraftExtensions.register(s)
       t(s, d, "orders").createOrReplaceTempView("orders_zo")
       s.sql("""
         WITH base AS (SELECT o_custkey % 1024 AS a,

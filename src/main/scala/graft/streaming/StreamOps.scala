@@ -59,29 +59,25 @@ object StreamOps {
     Option(streamOn).getOrElse(s).readStream.schema(ev.schema).parquet(in)
   }
 
-  /** Shuffle/state partition count for ONE bounded streaming run.
-    * Conf override first (`spark.graft.stream.statePartitions` — the
-    * production knob: a stateful query's partition count is a start-time
-    * choice sized to throughput and keyspace, and repartitioning live state
-    * is a migration), else derived from the landed input bytes (guide §2:
-    * scale-adaptive partitioning, never the session-wide core count). The
-    * r18 opt-round measurement behind this: every stateful key inherited
-    * `spark.sql.shuffle.partitions` = CPUS (32), so each micro-batch paid
-    * 32 state-store opens/commits (32 RocksDB instances for the tws keys)
-    * to hold a few KB of state — the stream group benched 74.4 s of the
-    * 469 s total at sf0.1 with the state-store machinery, not the data,
-    * dominating. One partition per 32 MB of landed input keeps the same
-    * plan shape at every test SF and grows linearly with real volume. */
-  private def statePartitions(s: SparkSession, inputDirs: Seq[String]): Int =
-    s.conf.getOption("spark.graft.stream.statePartitions").map(_.toInt)
-      .getOrElse {
-        val bytes = inputDirs.map { p =>
-          try Option(new java.io.File(p).listFiles())
-            .map(_.filter(_.isFile).map(_.length).sum).getOrElse(0L)
-          catch { case _: Throwable => 0L }
-        }.sum
-        math.max(1L, math.min(4096L, bytes / (32L << 20) + 1L)).toInt
-      }
+  /** Shuffle/state partition count for ONE bounded streaming run, derived
+    * from the landed input bytes (scale-adaptive partitioning, never the
+    * session-wide core count). It is a start-time choice: repartitioning
+    * live state is a migration. The measurement behind this: every
+    * stateful key inherited `spark.sql.shuffle.partitions` = CPUS (32), so
+    * each micro-batch paid 32 state-store opens/commits (32 RocksDB
+    * instances for the tws keys) to hold a few KB of state — the stream
+    * group benched 74.4 s of the 469 s total at sf0.1 with the state-store
+    * machinery, not the data, dominating. One partition per 32 MB of
+    * landed input keeps the same plan shape at every test SF and grows
+    * linearly with real volume. */
+  private def statePartitions(inputDirs: Seq[String]): Int = {
+    val bytes = inputDirs.map { p =>
+      try Option(new java.io.File(p).listFiles())
+        .map(_.filter(_.isFile).map(_.length).sum).getOrElse(0L)
+      catch { case _: Throwable => 0L }
+    }.sum
+    math.max(1L, math.min(4096L, bytes / (32L << 20) + 1L)).toInt
+  }
 
   /** Clone of `s` for one streaming run with scale-adaptive shuffle/state
     * partitioning (see [[statePartitions]]). Conf binds at query start, so
@@ -93,7 +89,7 @@ object StreamOps {
       try rs.conf.set(k, v) catch { case _: Exception => () }
     }
     rs.conf.set("spark.sql.shuffle.partitions",
-      statePartitions(s, inputDirs).toString)
+      statePartitions(inputDirs).toString)
     rs
   }
 
@@ -128,7 +124,7 @@ object StreamOps {
     // default untouched
     if (inputDirs.nonEmpty)
       rs.conf.set("spark.sql.shuffle.partitions",
-        statePartitions(s, inputDirs).toString)
+        statePartitions(inputDirs).toString)
     body(rs)
   }
 

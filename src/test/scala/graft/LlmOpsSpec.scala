@@ -149,7 +149,7 @@ class LlmOpsSpec extends AnyFunSuite {
   test("ShingleSet equals the HOF shingle formulation on real documents") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, explode, expr, size => asize}
-    graft.functions.ShingleSet.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val extra = Seq((9101L, "en", "one two"), (9102L, "en", "a  a a  a"),
       (9103L, "en", "  x y z  "), (9104L, "en", "")).toDF("doc_id", "lang", "text")
     val docs = Tables.load(spark, sfDir, "documents")
@@ -362,7 +362,7 @@ class LlmOpsSpec extends AnyFunSuite {
   // walk would see 6 units and report ~1.918.
   test("CharEntropy counts code points, not UTF-16 units (non-BMP)") {
     import spark.implicits._
-    graft.functions.CharEntropy.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val h = Seq("a𝄞𝄞b").toDF("text")
       .selectExpr("graft_char_entropy(text) AS h").collect().head.getDouble(0)
     assert(math.abs(h - 1.5) < 1e-12, s"got $h")
@@ -375,7 +375,7 @@ class LlmOpsSpec extends AnyFunSuite {
   // (Holds on BMP text only: split(text, '') yields UTF-16 units, the
   // native expression counts code points — see CharEntropy's scaladoc.)
   test("CharEntropy equals the exploded groupBy formulation") {
-    graft.functions.CharEntropy.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val docs = Tables.load(spark, sfDir, "documents")
       .where(col("doc_id") % 7 === 0)
     val native = docs

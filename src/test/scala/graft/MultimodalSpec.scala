@@ -35,7 +35,7 @@ class MultimodalSpec extends AnyFunSuite {
   // equivalence contract TextWinnowSpec pins for text_fingerprint.
   test("ByteWindows equals the HOF hex-decode formulation on real payloads") {
     import org.apache.spark.sql.functions._
-    graft.functions.ByteWindows.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val p = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
       .withColumn("n", octet_length(col("payload")))

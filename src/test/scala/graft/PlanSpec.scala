@@ -670,7 +670,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("graft_morton stays inside whole-stage codegen") {
-    graft.functions.MortonCode.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val df = Tables.load(spark, sfDir, "orders")
       .selectExpr("graft_morton(o_custkey % 1024, o_orderkey % 1024) AS z")
     df.collect()

@@ -17,6 +17,35 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs.keySet))
   }
 
+  // tools/check.py stages the edge derivation every graph oracle embeds
+  // as its `pairs` CTE (its PAIRS_SQL), and stubs the text from `pairs AS (`
+  // to the next `GROUP BY 1, 2)` only when that text is the staged join,
+  // whitespace aside. Any other body fails the check, so the registry is
+  // held to the same text.
+  test("graph oracles embed the staged pairs join as their pairs CTE") {
+    val open = "pairs AS ("
+    val pairsSql =
+      """SELECT CAST(c_nationkey AS BIGINT) AS a,
+        |  CAST(s_nationkey AS BIGINT) AS b, count(*) AS w
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON l_orderkey = o_orderkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |GROUP BY 1, 2""".stripMargin
+    def words(s: String) = s.split("\\s+").filter(_.nonEmpty).toSeq
+    val staged = SparkEntry.oracleSql.filter { case (k, sql) =>
+      k.startsWith("graph_") && sql.contains(open)
+    }
+    assert(staged.nonEmpty)
+    val drifted = staged.collect { case (k, sql)
+      if {
+        val body = sql.indexOf(open) + open.length
+        val end = sql.indexOf("GROUP BY 1, 2)", body)
+        end < 0 || words(sql.substring(body, end + "GROUP BY 1, 2".length)) != words(pairsSql)
+      } => k }
+    assert(drifted.isEmpty, s"pairs CTE is not the staged join: ${drifted.toSeq.sorted}")
+  }
+
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -51,7 +51,7 @@ class TextWinnowSpec extends AnyFunSuite {
 
   test("md5 winnow: multi-byte grams hash their UTF-8 bytes, short is null") {
     import spark.implicits._
-    graft.functions.Md5Winnow.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val df = Seq("the quick brown fox jumps", "héllo wörld, 你好世界你好世界",
       "exactly11ch", "short").toDF("text")
     val got = df.select(expr("graft_md5_winnow(text)").as("w")).collect()
@@ -69,7 +69,7 @@ class TextWinnowSpec extends AnyFunSuite {
 
   test("interpreted eval equals codegen, and multi-byte text is walked by codepoints") {
     import spark.implicits._
-    graft.functions.TextWinnow.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     // ASCII, multi-byte (CJK + accents), exactly-11 chars, and sub-threshold
     val df = Seq("the quick brown fox jumps", "héllo wörld, 你好世界你好世界",
       "exactly11ch", "short").toDF("text")

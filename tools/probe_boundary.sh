@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# r18 j~0.8 boundary-crowd probe (VERDICT r17 #2 "done =" clause): crowds
+# j~0.8 boundary-crowd probe: crowds
 # whose TRUE pairwise Jaccard sits at {0.78, 0.80, 0.82, 0.90}, sizes
 # straddling the 64 shingle-df/bucket caps (32..200), including 9-shingle
 # short docs — the thinnest part of the recall surface. Machine checks:
@@ -10,7 +10,7 @@
 #     full-shingle-set verification is what rejects them
 #   - dedup_minhash_star (cap-1 demo listing) agrees edge-wise: no (u,v)
 #     edge inside a j<0.8 crowd, and every edge it lists is intra-crowd
-# Record: tools/scaleprobe_r18_boundary.json
+# Record: $GRAFT_BOUNDARY_OUT/boundary.json
 #
 # Usage: tools/probe_boundary.sh
 #   env: GRAFT_BOUNDARY_DIR (default /tmp/graft_boundary)
@@ -92,7 +92,7 @@ checks["fillers_unclustered"] = {
 ok = all(v["pass"] for v in checks.values())
 rec = {"probe": "boundary_crowds_j08", "verify_wall_sec": secs,
        "groups": manifest, "checks": checks, "pass": ok}
-with open("tools/scaleprobe_r18_boundary.json", "w") as f:
+with open(f"{out}/boundary.json", "w") as f:
     json.dump(rec, f)
     f.write("\n")
 print(json.dumps({k: v for k, v in checks.items()}, indent=1))

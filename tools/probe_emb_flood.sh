@@ -1,6 +1,5 @@
 #!/usr/bin/env bash
-# r18 embedding-FLOOD probe — the corner VERDICT r17 #4 named: a saturated
-# sign-LSH bucket going quadratic. Corpus = the 5 000 sf0.1 vectors plus
+# Embedding-FLOOD probe — a saturated sign-LSH bucket going quadratic. Corpus = the 5 000 sf0.1 vectors plus
 # 200 000 byte-identical copies of vector 0 (one bucket at occupancy
 # ~200k). Uncapped all-pairs inside that bucket is ~2·10^10 cosine rows —
 # unrunnable; with EmbBucketCap the cluster key pays O(occ) star edges +
@@ -10,7 +9,12 @@
 #     (every copy + the base vector reaches the code-rep at cosine 1)
 #   - emb_knn_graph / emb_hubness_ann: complete, bounded output
 #   - wall for the three keys recorded; pass = all three under 600 s
-# Record: tools/scaleprobe_r18_embflood.json
+# Record: $GRAFT_FLOOD_OUT/embflood.json
+#
+# Usage: tools/probe_emb_flood.sh
+#   env: GRAFT_FLOOD_DIR (default /tmp/graft_embflood)
+#        GRAFT_FLOOD_OUT (default /tmp/graft_embflood_out)
+#        GRAFT_FLOOD_COPIES (default 200000)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -75,7 +79,7 @@ rec = {"probe": "emb_flood", "copies": copies,
        "checks": {k: {"value": v[0], "rule": v[1], "pass": v[2]}
                   for k, v in checks.items()},
        "pass": ok}
-with open("tools/scaleprobe_r18_embflood.json", "w") as f:
+with open(f"{out}/embflood.json", "w") as f:
     json.dump(rec, f)
     f.write("\n")
 print(json.dumps(rec, indent=1))

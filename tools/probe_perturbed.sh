@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# r17 perturbed-crowd probe (VERDICT r16 #1 "done =" clause): corpus ×200
+# Perturbed-crowd probe: corpus ×200
 # where every replica r>0 carries a one-token suffix — NEAR-identical,
 # never byte-identical crowds (1 M docs), so the md5 exact-star pass can't
 # collapse them and every shingle df / band bucket is saturated far past
@@ -16,8 +16,7 @@
 #   - dedup_ngram_jaccard (capped-universe listing, r16 contract) stays
 #     LINEAR in docs — a few boundary-shingle pairs per doc, never the
 #     |crowd|² blowup the caps exist to avoid
-# Record: tools/scaleprobe_${GRAFT_PROBE_TAG}_perturbed.json
-# (standing per-round gate since r18 — VERDICT r17 #5)
+# Record: $GRAFT_PERTURB_OUT/perturbed.json
 #
 # Usage: tools/probe_perturbed.sh
 #   env: GRAFT_PERTURB_DIR (default /tmp/graft_perturb200)
@@ -39,14 +38,13 @@ SPARK_GRAFT_KEYS="dedup_clusters,dedup_exact,dedup_ngram_jaccard" \
   sbt -batch "runMain graft.Verify $DIR $OUT" 2>&1 | tail -3
 T1=$(date +%s)
 
-TAG="${GRAFT_PROBE_TAG:-r18}"
-python3 - "$OUT" "$((T1 - T0))" "$TAG" <<'EOF'
+python3 - "$OUT" "$((T1 - T0))" "$DIR" <<'EOF'
 import glob, json, sys
 import duckdb
 import pyarrow.parquet as pq
 import pyarrow.compute as pc
 
-out, secs, tag = sys.argv[1], int(sys.argv[2]), sys.argv[3]
+out, secs, gen = sys.argv[1], int(sys.argv[2]), sys.argv[3]
 REP = 200
 
 def tbl(k):
@@ -84,7 +82,7 @@ junk = con.sql(f"""
                         count(DISTINCT md5(trim(regexp_replace(lower(d.text),
                           '\\s+', ' ', 'g')))) AS ntext
                  FROM cl JOIN small USING (cluster_rep)
-                 JOIN '/tmp/graft_perturb200/documents.parquet' d
+                 JOIN '{gen}/documents.parquet' d
                    ON d.doc_id = cl.doc_id
                  GROUP BY cl.cluster_rep)
   SELECT coalesce(sum(CASE WHEN ntext > 1 THEN 1 ELSE 0 END), 0)
@@ -109,7 +107,7 @@ rec = {
                for k, v in checks.items()},
     "pass": ok,
 }
-with open(f"tools/scaleprobe_{tag}_perturbed.json", "w") as f:
+with open(f"{out}/perturbed.json", "w") as f:
     json.dump(rec, f)
     f.write("\n")
 print(json.dumps(rec, indent=1))
