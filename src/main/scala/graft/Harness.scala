@@ -70,12 +70,13 @@ object Harness {
   private val running = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Runs `body` for each key in order. A key that throws is reported on
-    * stderr and the next key still runs. Each key's tracked
-    * materializations are released after it, outside its timed region.
+    * stderr and the next key still runs. Each key's key-scoped
+    * materializations are released after it, outside its timed region;
+    * session-scoped ones (`Mats.shared`, `Mats.memo`) stay for later keys.
     *
-    * `Mats` keeps one global queue of tracked materializations, so keys
-    * must run one at a time: a run started while another is in progress
-    * (from another thread, or from inside a running key) throws. */
+    * `Mats` keeps one global key-scope queue, so keys must run one at a
+    * time: a run started while another is in progress (from another
+    * thread, or from inside a running key) throws. */
   def run[A](keys: Seq[String])(body: String => A): Seq[Outcome[A]] = {
     if (!running.compareAndSet(false, true))
       throw new IllegalStateException("a Harness run is already in progress")

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One declared operator from SURVEY.md §2C.
@@ -70,8 +74,11 @@ object Tables {
       // resolves the file to and both engines order/bucket identically.
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      // set before the read: the footer decode follows the session's value
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // An int64-nanos ts reads only with nanosAsLong on, both in the footer
+      // decode below and in the scan, which takes the session's value when
+      // it executes; so a nanos file sets it for the session, and a
+      // microsecond file leaves the session as it was.
+      if (nanosTs(spark, path)) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = parquet(spark, path)
       raw.schema("ts").dataType match {
         case LongType =>
@@ -84,6 +91,20 @@ object Tables {
     } else {
       parquet(spark, path)
     }
+  }
+
+  /** Whether the footer of `path` (a file, or a directory's first parquet
+    * file) stores `ts` as int64 nanoseconds. */
+  private def nanosTs(spark: SparkSession, path: String): Boolean = {
+    val (p, conf) = (new Path(path), spark.sessionState.newHadoopConf())
+    p.getFileSystem(conf).listStatus(p).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      .sortBy(_.toString).headOption.exists { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        try r.getFileMetaData.getSchema.getType(Seq("ts"): _*).getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        } finally r.close()
+      }
   }
 
   /** `spark.read.parquet(path)`, with its schema decoded from a footer on

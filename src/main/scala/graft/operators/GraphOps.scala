@@ -34,13 +34,10 @@ import org.apache.spark.sql.functions._
 object GraphOps {
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
-  /** Sparsified undirected supply-graph edges (src, dst), symmetric.
-    * Cached (plan-keyed): eight graph keys consume this relation and each
-    * used to re-derive the 4-table fact join per key (r18 opt round: the
-    * derivation is most of every cheap graph key's wall) — CacheManager
-    * dedupes the identical plan, so the join runs once per session and the
-    * ~|V|-row edge set stays pinned (tiny at any scale: one row per
-    * nation pair). */
+  /** Sparsified undirected supply-graph edges (src, dst), symmetric, in
+    * session scope: nine graph keys read them, and the 4-table fact join
+    * that derives them is most of each cheap graph key's wall. The edge set
+    * has one row per nation pair, tiny at any scale. */
   private[operators] def supplyEdges(s: SparkSession, d: String): DataFrame = {
     val pairs = t(s, d, "customer")
       .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"))
@@ -62,7 +59,7 @@ object GraphOps {
         struct(col("u").as("src"), col("v").as("dst")),
         struct(col("v").as("src"), col("u").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .cache()
+      .sharedCache()
   }
 
   private def nodes(s: SparkSession, d: String): DataFrame =
@@ -213,9 +210,8 @@ object GraphOps {
   private val graphClusteringCoeff = Op(
     "graph_clustering_coeff",
     (s, d) => {
-      import org.apache.spark.sql.functions.broadcast
       val el = supplyEdges(s, d).where(col("src") < col("dst"))
-        .select(col("src").as("u"), col("dst").as("v")).trackedCache()
+        .select(col("src").as("u"), col("dst").as("v"))
       val tri = el.as("e1")
         .join(el.as("e2"), col("e1.v") === col("e2.u"))
         .join(el.as("e3"),
@@ -227,15 +223,13 @@ object GraphOps {
         .groupBy("vid").agg(count(lit(1)).as("tri"))
       val deg = supplyEdges(s, d).groupBy(col("src").as("vid"))
         .agg(count(lit(1)).as("deg"))
-      val out = deg.where(col("deg") >= 2)
+      deg.where(col("deg") >= 2)
         .join(broadcast(triPerNode), Seq("vid"), "left")
         .select(col("vid"), col("deg"),
           coalesce(col("tri"), lit(0L)).as("triangles"),
           round(lit(2.0) * coalesce(col("tri"), lit(0L)) /
             (col("deg") * (col("deg") - 1)), 6).as("coeff"))
         .orderBy("vid")
-      el.unpersist()
-      out
     },
     Some(s"""WITH $oracleEdgeCte,
              el AS (SELECT u, v FROM und),
@@ -332,7 +326,6 @@ object GraphOps {
         cur = (r.getLong(0), r.getLong(1))
         it += 1
       }
-      e.unpersist()
       dist.orderBy("vid")
     },
     Some(s"""WITH RECURSIVE $oracleWeightedEdgeCte,

@@ -58,23 +58,6 @@ object LlmOps {
     * applies the same cap so both engines stay in lockstep at any scale. */
   private[graft] val MaxShingleDf = 64
 
-  /** Corpus-size cache for the adaptive sign-LSH width, keyed by data dir
-    * ONLY (the count is a property of the parquet files, not of the session
-    * reading them) and bounded as a 64-entry LRU — no SparkSession is ever
-    * retained, and an unbounded dir set cannot accrete. Staleness caveat,
-    * by design: the cache assumes the embeddings parquet under a dir is
-    * immutable for the life of this process (true of the driver testdata
-    * and of any versioned corpus commit, which lands under a NEW path); a
-    * same-path rewrite mid-process would pin the previous LSH width until
-    * the entry ages out of the LRU. */
-  private val embCount: java.util.Map[String, java.lang.Long] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, java.lang.Long](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, java.lang.Long]): Boolean =
-          size() > 64
-      })
-
   /** Adaptive sign-LSH width: smallest bit count b (floored at 4, capped
     * at 16) with 2^b buckets >= n/256 — expected bucket occupancy stays
     * <= ~256 vectors, so the within-bucket candidate join grows ~O(n·256)
@@ -130,16 +113,10 @@ object LlmOps {
     * blocking key: shuffle partitions by bucket, never all-pairs; width
     * adapts to corpus size via [[signBits]]). */
   private def signBucketed(s: SparkSession, d: String): DataFrame = {
-    // The count() Spark job runs OUTSIDE the map's mutex: computeIfAbsent
-    // on a synchronizedMap would hold the single lock for the whole job,
-    // blocking every concurrent cache read (even for other dirs) for its
-    // duration. A racing miss on the same dir just recomputes the same
-    // immutable value — last write wins, both are identical.
-    val n = Option(embCount.get(d)).getOrElse {
-      val c = java.lang.Long.valueOf(t(s, d, "embeddings").count())
-      embCount.put(d, c) // LRU trim stays inside the map's own sync
-      c
-    }.longValue()
+    // the corpus size, memoized in session scope per data dir: it is a
+    // property of the parquet files, which a versioned corpus commit lands
+    // under a new path rather than rewriting
+    val n = graft.Mats.memo(s, ("embeddings rows", d))(t(s, d, "embeddings").count())
     val bits = signBits(n)
     // full 16-bit leading-sign code; the adaptive bucket is its top `bits`
     // bits (one shift), so bk is IDENTICAL to the old per-width sum while
@@ -278,7 +255,7 @@ object LlmOps {
     * capped path materializes, so the fan-in costs no second explode. */
   private[graft] def minhashStarEdgesFrom(
       docs: DataFrame, bucketCap: Int): DataFrame = {
-    val sh = shinglesFrom(docs).cache()
+    val sh = shinglesFrom(docs).sharedCache()
     val hm = sh.select(col("doc_id"), md5(col("s").cast("binary")).as("m"))
     val rots = (0 until 16).map { i =>
       val rot = if (i == 0) col("m")
@@ -293,7 +270,7 @@ object LlmOps {
       (0 until 8).map(b => struct(lit(b).as("b"),
         col(s"h${2 * b}").as("b1"), col(s"h${2 * b + 1}").as("b2"))): _*)).as("bb"))
       .select(col("doc_id"), col("bb.b"), col("bb.b1"), col("bb.b2"))
-      .cache()
+      .sharedCache()
     val hot = bands.groupBy("b", "b1", "b2")
       .agg(min(col("doc_id")).as("anchor"), count(lit(1)).as("bf"))
       .where(col("bf") > bucketCap)
@@ -315,13 +292,13 @@ object LlmOps {
       .where(col("jaccard") >= 0.8)
   }
 
-  /** Production minhash-star edges at the clustering keys' cap — cached
-    * (plan-keyed) so dedup_clusters and dedup_survivor share ONE signature
-    * build + verification per session instead of paying it each. */
+  /** Production minhash-star edges at the clustering keys' cap, cached for
+    * the key: dedup_survivor reuses dedup_clusters' labels through the
+    * [[connectedComponents]] memo and does not read them. */
   private def minhashStarEdges(s: SparkSession, d: String): DataFrame =
     minhashStarEdgesFrom(t(s, d, "documents"), StarBucketCap)
       .select("u", "v")
-      .cache()
+      .trackedCache()
 
   /** Hot-bucket threshold for the anchor-star pass — deliberately LOWER
     * than [[MaxBandBucket]] (r18, the j≈0.8 boundary stress). The pair
@@ -393,22 +370,19 @@ object LlmOps {
     *     threshold the shuffled anti-join is the safe fallback.
     *   - the shingle stream is cached before fanning into the df aggregate
     *     and the anti-join probe, so the ShingleSet explode — the expensive
-    *     part — runs once per materialization, not twice. */
-  private def cappedShingles(docs: DataFrame): DataFrame =
-    cappedShinglesFrom(docs)
-
-  /** [[cappedShingles]] with persistence switchable off so PlanSpec can
-    * assert the uncached physical plan (a cached DF plans as an
-    * InMemoryTableScan, hiding the aggregate shape). */
+    *     part — runs once per materialization, not twice. The stream is
+    *     shared (other keys read it); the capped set is the key's own.
+    * `persist = false` lets PlanSpec assert the uncached physical plan (a
+    * cached DF plans as an InMemoryTableScan, hiding the aggregate shape). */
   private[graft] def cappedShinglesFrom(
       docs: DataFrame, persist: Boolean = true): DataFrame = {
     val sh0 = shinglesFrom(docs)
-    val sh = if (persist) sh0.cache() else sh0
+    val sh = if (persist) sh0.sharedCache() else sh0
     val hot = sh.groupBy("s").agg(count(lit(1)).as("dfc"))
       .where(col("dfc") > MaxShingleDf)
       .select("s")
     val capped = sh.join(hot, Seq("s"), "left_anti")
-    if (persist) capped.cache() else capped
+    if (persist) capped.trackedCache() else capped
   }
 
   /** (doc_a, doc_b, i, ns_a, ns_b): shared-shingle intersection counts +
@@ -418,7 +392,7 @@ object LlmOps {
     * the cached cut point (plan-keyed: one materialization per session no
     * matter which scorer runs first). */
   private def shingleIntersectionsFrom(docs: DataFrame): DataFrame = {
-    val sh = cappedShingles(docs)
+    val sh = cappedShinglesFrom(docs)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("ns"))
     sh.as("a")
       .join(sh.as("b"), col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
@@ -428,7 +402,7 @@ object LlmOps {
       .join(sizes.as("nb"), col("doc_b") === col("nb.doc_id"))
       .select(col("doc_a"), col("doc_b"), col("i"),
         col("na.ns").as("ns_a"), col("nb.ns").as("ns_b"))
-      .cache()
+      .sharedCache()
   }
 
   private[graft] def jaccardPairsFrom(docs: DataFrame): DataFrame =
@@ -437,9 +411,8 @@ object LlmOps {
         round(col("i").cast("double") /
           (col("ns_a") + col("ns_b") - col("i")), 4).as("jaccard"))
       .where(col("jaccard") >= 0.8)
-      // the pair set is tiny but feeds three keys (pairs/clusters/survivor)
-      // — cached so all three share one materialization per session
-      .cache()
+      // tiny; dedup_incremental and dedup_ngram_jaccard read one copy
+      .sharedCache()
 
   /** The CLUSTERING keys' pair edges: same capped-shingle intersections as
     * the listing keys, but scored against the FULL (uncapped) shingle-set
@@ -463,8 +436,8 @@ object LlmOps {
         round(col("i").cast("double") /
           (col("fa.fns") + col("fb.fns") - col("i")), 4).as("jaccard"))
       .where(col("jaccard") >= 0.8)
-      // feeds both clustering keys — one materialization per session
-      .cache()
+      // read by dedup_clusters only: dedup_survivor reuses its labels
+      .trackedCache()
   }
 
   /** DuckDB CTEs mirroring [[jaccardLowerPairsFrom]] (assumes the
@@ -559,25 +532,18 @@ object LlmOps {
     * Returns (node, lab) for every node appearing in the edge set. Throws
     * rather than returning non-converged labels — a silent split cluster
     * would keep multiple "survivors" of the same near-dup group, i.e.
-    * leak duplicates into a training corpus with no error anywhere. */
-  /** Session-scoped memo of converged component labels, keyed by the
-    * CANONICALIZED edge plan (r18 opt round): dedup_clusters and
-    * dedup_survivor run the identical fixpoint over the identical cached
-    * edge union — the edge INPUTS were already shared via plan-keyed
-    * caches, but each key still re-ran the whole contraction loop
-    * (~2.5 s of checkpoint+aggregate rounds at sf0.1). The labels are a
-    * localCheckpointed, component-count-sized relation, so pinning them
-    * for the session costs KBs. Correctness is untouched: the fixpoint
-    * has a unique solution per edge set, and the memo key is the
-    * analyzed-canonicalized plan plus the round budget. */
-  private val ccMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-    DataFrame]()
-
+    * leak duplicates into a training corpus with no error anywhere.
+    *
+    * The labels are memoized in session scope ([[graft.Mats.memo]]) on the
+    * canonicalized edge plan plus the round budget: dedup_clusters and
+    * dedup_survivor run the identical fixpoint over the identical edge
+    * union, which would otherwise re-run the whole loop (~2.5 s of rounds
+    * at sf0.1). They read one component-count-sized checkpoint (KBs), and
+    * the fixpoint has a unique solution per edge set. */
   private[graft] def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame =
-    ccMemo.computeIfAbsent(
-      (edges.sparkSession, edges.queryExecution.analyzed.canonicalized, maxIter),
-      _ => connectedComponentsCompute(edges, maxIter))
+    graft.Mats.memo(edges.sparkSession, ("connectedComponents", graft.Mats.planKey(edges), maxIter)) {
+      connectedComponentsCompute(edges, maxIter)
+    }
 
   private def connectedComponentsCompute(edges: DataFrame, maxIter: Int): DataFrame = {
     // lazy checkpoints throughout: the sig() aggregate right after each
@@ -588,7 +554,7 @@ object LlmOps {
       .where(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).cast("long").as("a"),
         least(col("u"), col("v")).cast("long").as("b"))
-      .distinct().localCheckpoint(false)
+      .distinct().trackedCkpt()
 
     // fixpoint signature: count + order-independent hash-xor of the edge
     // set (xor, not sum — sum overflows long under ANSI mode; a 64-bit
@@ -617,22 +583,16 @@ object LlmOps {
         .unionByName(m.select(col("a"), col("m").as("b")))
         .distinct()
     }
-    // superseded rounds are freed as soon as the next round has been
-    // materialized by its sig() aggregate (r19: previously every round's
-    // checkpoint blocks stayed pinned for the whole session); the FINAL
-    // round's blocks stay — they back the memoized label relation
-    def freeCkpt(df: DataFrame): Unit =
-      df.queryExecution.logical.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(false))
     var s = sig(e)
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint(false)
+      val next = smallStar(largeStar(e)).trackedCkpt()
       val ns = sig(next)
       converged = ns == s
-      freeCkpt(e)
+      // a superseded round is freed once the next round's sig() has
+      // materialized it; the final round backs the memoized labels
+      graft.Mats.free(e)
       e = next; s = ns; it += 1
     }
     if (!converged)
@@ -781,7 +741,7 @@ object LlmOps {
       val H = 64; val bands = 16; val rows = 4
       // the shingle set feeds the signature AND both sides of the exact
       // verification join — persist it once
-      val sh = shingles(s, d).cache()
+      val sh = shingles(s, d).trackedCache()
       // hash the variable-length shingle STRING once, then derive the 64
       // seeded hashes from the fixed-width long — 64 string hashes per
       // shingle row (~20 bytes each) cost ~3x more than 1 string hash + 64
@@ -797,7 +757,7 @@ object LlmOps {
           xxhash64((b * rows until (b + 1) * rows).map(i => col(s"m$i")): _*).as("bh"))): _*))
         .as("bb"))
         .select(col("doc_id"), col("bb.band"), col("bb.bh"))
-        .cache() // tiny (docs × 16 rows); read by both sides of the band join
+        .trackedCache() // tiny (docs × 16 rows); read by both sides of the band join
       val cand = minhashCandidatePairs(banded, MaxBandBucket)
       // verify candidates exactly (candidate set is tiny post-LSH)
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("ns"))
@@ -876,7 +836,7 @@ object LlmOps {
         .select(col("doc_id"), simExpr.as("sim"))
         // one signature row (doc_id, int64) per doc — persist so both sides
         // of the band self-join read it instead of re-running the token agg
-        .cache()
+        .trackedCache()
       simhashCandidatePairs(sig, maxBucket = 256)
         .orderBy("doc_a", "doc_b")
     },
@@ -2264,7 +2224,7 @@ object LlmOps {
     (s, d) => {
       val tk = t(s, d, "documents")
         .select(tokens(col("text")).as("tk")).where(size(col("tk")) >= 2)
-        .cache()
+        .trackedCache()
       val uni = tk.select(explode(col("tk")).as("w"))
         .groupBy("w").agg(count(lit(1)).as("cw"))
       val bi = tk.select(explode(expr(
@@ -2413,7 +2373,7 @@ object LlmOps {
       val tf = t(s, d, "documents")
         .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .cache()
+        .trackedCache()
       val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
       val n = tf.select(countDistinct(col("doc_id")).as("n_docs"))
       val w = Window.partitionBy("doc_id").orderBy(desc("tfidf"), asc("term"))
@@ -2472,7 +2432,7 @@ object LlmOps {
           s"""transform(sequence(0, size(tk) - $SubstringSpanTokens),
              |  i -> md5(array_join(slice(tk, i + 1, $SubstringSpanTokens), ' ')))""".stripMargin))
           .as("h"))
-        .cache()
+        .trackedCache()
       // "seen in ≥ 2 distinct docs" ⟺ min(doc_id) < max(doc_id): plain
       // min/max partials are map-side-combinable single-pass aggregates,
       // where a count-distinct would pay a second Expand/shuffle phase
@@ -2538,7 +2498,7 @@ object LlmOps {
     (s, d) => {
       val e = t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("va"))
-        .cache()
+        .sharedCache()
       def assign(cen: DataFrame): DataFrame =
         e.crossJoin(broadcast(cen))
           .select(col("vec_id"), col("cid"), round(sqDist, 6).as("dist"))

@@ -31,21 +31,18 @@ import java.nio.file.Files
   * (StreamingSpec), where a second landing batch exists.
   */
 object StreamOps {
-  /** One landing dir per (session, data dir) — the ops watching a single
-    * arrival share it instead of re-writing the events table five times. */
-  private val landed =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** Landing dir for the shared events fixture (one parquet file), created
-    * once per (session, data dir) — exposed so ops can size their stream
-    * session from the landed bytes before opening the stream. */
-  private def landedDir(s: SparkSession, d: String): String =
-    landed.computeIfAbsent((s, d), { _ =>
+    * once per (SparkContext, data dir) in session scope, so the ops watching
+    * a single arrival share it instead of re-writing the events table —
+    * exposed so ops can size their stream session from the landed bytes
+    * before opening the stream. */
+  private[graft] def landedDir(s: SparkSession, d: String): String =
+    graft.Mats.memo(s, ("events landing", d)) {
       val dir = tmp("graft_land_")
       Tables.load(s, d, "events").coalesce(1)
         .write.mode("overwrite").parquet(dir)
       dir
-    })
+    }
 
   /** Land events (µs-truncated ts, FIXTURES.md §A) as ONE parquet file and
     * open an explicit-schema stream over the landing dir. */
@@ -54,8 +51,7 @@ object StreamOps {
     val ev = Tables.load(s, d, "events")
     val in = landedDir(s, d)
     // streamOn: open the stream on a scoped clone (withRocksDbProvider /
-    // streamSession) while the landing cache stays keyed by the caller's
-    // shared session
+    // streamSession); the landing dir is the caller's
     Option(streamOn).getOrElse(s).readStream.schema(ev.schema).parquet(in)
   }
 
@@ -79,17 +75,22 @@ object StreamOps {
     math.max(1L, math.min(4096L, bytes / (32L << 20) + 1L)).toInt
   }
 
-  /** Clone of `s` for one streaming run with scale-adaptive shuffle/state
-    * partitioning (see [[statePartitions]]). Conf binds at query start, so
-    * it is set on a scoped clone — the shared session's conf is never
-    * mutated (parallel suites run ops concurrently on one session). */
+  /** Clone of `s` for one streaming run. Conf binds at query start, so a
+    * run's settings go on a scoped clone and the shared session's conf is
+    * never mutated: parallel suites run ops concurrently on one session,
+    * and a set-then-restore would race another thread's query. The clone
+    * shares the SparkContext and cached data; its conf starts from the
+    * context conf, so the parent's runtime conf (shuffle partitions,
+    * session timezone) is copied first — static entries can't be re-set
+    * and keep their context values. Given input dirs, shuffle/state
+    * partitions scale with them (see [[statePartitions]]). */
   private def streamSession(s: SparkSession, inputDirs: Seq[String]): SparkSession = {
     val rs = s.newSession()
     s.conf.getAll.foreach { case (k, v) =>
       try rs.conf.set(k, v) catch { case _: Exception => () }
     }
-    rs.conf.set("spark.sql.shuffle.partitions",
-      statePartitions(inputDirs).toString)
+    if (inputDirs.nonEmpty)
+      rs.conf.set("spark.sql.shuffle.partitions", statePartitions(inputDirs).toString)
     rs
   }
 
@@ -99,32 +100,14 @@ object StreamOps {
 
   private def msCol(c: String) = expr(s"unix_micros($c) div 1000")
 
-  /** Runs `body` against a CLONED session whose state store provider is
-    * RocksDB (required by transformWithState) — provider choice binds at
-    * query start, so the scope covers exactly the queries started on the
-    * clone. A clone, not set-then-restore on the shared session: any
-    * streaming query another thread starts during a mutate/restore window
-    * would bind the wrong provider or race the restore (parallel suites
-    * run ops concurrently on one session). The clone shares the
-    * SparkContext and cached data; its conf starts from the context conf,
-    * so the parent's RUNTIME conf (shuffle partitions, session timezone)
-    * is copied over first — static entries can't be re-set and keep their
-    * context values. */
+  /** Runs `body` on a [[streamSession]] whose state store provider is
+    * RocksDB (required by transformWithState; the provider binds at query
+    * start, so it covers exactly the queries started on the clone). */
   private[graft] def withRocksDbProvider[T](s: SparkSession,
       inputDirs: Seq[String] = Nil)(body: SparkSession => T): T = {
-    val rs = s.newSession()
-    s.conf.getAll.foreach { case (k, v) =>
-      try rs.conf.set(k, v) catch { case _: Exception => () }
-    }
+    val rs = streamSession(s, inputDirs)
     rs.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-    // callers that pass their landing dirs get scale-adaptive state
-    // partitioning (see statePartitions); no-arg callers keep the session
-    // default untouched
-    if (inputDirs.nonEmpty)
-      rs.conf.set("spark.sql.shuffle.partitions",
-        statePartitions(inputDirs).toString)
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     body(rs)
   }
 

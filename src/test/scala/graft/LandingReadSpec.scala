@@ -86,16 +86,12 @@ class LandingReadSpec extends AnyFunSuite {
   test("sf0.01 reference tables, not written by Spark, each a single-file path") {
     val tables = new java.io.File(sf0_01).listFiles()
       .map(_.getPath).filter(_.endsWith(".parquet")).sorted
-      .filterNot(_.endsWith("events.parquet"))
-    assert(tables.length >= 9)
+    assert(tables.length >= 10)
     tables.foreach(t => sameAsSpark(t))
   }
 
-  test("events after Tables.load has set nanos-as-long") {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    withConf(key -> spark.conf.get(key, "false")) {
-      Tables.load(spark, sf0_01, "events")
-      assert(spark.conf.get(key) === "true")
+  test("events with nanos-as-long on") {
+    withConf("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
       sameAsSpark(s"$sf0_01/events.parquet")
     }
   }

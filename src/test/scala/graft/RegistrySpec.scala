@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Registry-wide smoke: every declared §2C key builds and yields rows, keys
   * are unique, and every oracle belongs to a registered query. */
@@ -15,6 +16,23 @@ class RegistrySpec extends AnyFunSuite {
     // (SparkEntry's require fires first; this keeps the guard test-visible)
     assert(qs.size === SparkEntry.opCount, "a duplicate key shadowed an op")
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs.keySet))
+  }
+
+  // graft.Mats owns how long a materialized relation lives (key scope or
+  // session scope); a raw cache, persist, checkpoint or unpersist in an
+  // operator would be a third lifetime that no scope releases.
+  test("operators, streaming and functions materialize only through Mats") {
+    val lifetime = """\.cache\(\)|\.persist\(|localCheckpoint\(|unpersist\(""".r
+    val roots = Seq("operators", "streaming", "functions")
+      .map(d => new java.io.File(s"src/main/scala/graft/$d"))
+    assert(roots.forall(_.isDirectory))
+    val hits = for {
+      dir <- roots
+      f <- dir.listFiles().toSeq.sortBy(_.getName) if f.getName.endsWith(".scala")
+      (line, n) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
+      if lifetime.findFirstIn(line).isDefined
+    } yield s"${f.getName}:${n + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   // tools/check.py stages the edge derivation every graph oracle embeds

@@ -75,6 +75,14 @@ class TablesSpec extends AnyFunSuite {
     }
   }
 
+  test("loading events at sf0.001 and sf0.01 leaves the session's settings as they were") {
+    val s = spark.newSession()
+    val before = s.conf.getAll.toSet
+    for (dir <- Seq(sfDir, sf0_01)) Tables.load(s, dir, "events")
+    val changed = s.conf.getAll.toSet -- before
+    assert(changed.isEmpty, s"settings the load changed: $changed")
+  }
+
   test("documents is widened over as many scan splits as Spark's reader gives") {
     val splits = spark.read.parquet(s"$sf0_01/documents.parquet")
       .queryExecution.toRdd.getNumPartitions
